@@ -18,6 +18,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -39,21 +40,34 @@ def capture_plan(df, path: str) -> None:
         f.write(txt)
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse the command line; ``names`` holds the queries to time."""
+    import bench
+
+    p = argparse.ArgumentParser(description="Time queries in isolation.")
+    p.add_argument("names", nargs="*", metavar="QUERY")
+    p.add_argument("--all", action="store_true", help="time the whole HEADLINE list")
+    p.add_argument("--plans", metavar="TAG",
+                   help="also write plans/r06/<query>_<TAG>.txt")
+    args = p.parse_args(argv)
+    # every query name starts with q_: such a tag is a query name that
+    # --plans consumed
+    if args.plans is not None and args.plans.startswith("q_"):
+        p.error(f"--plans takes a tag, not the query name {args.plans!r}")
+    if args.all:
+        args.names = list(bench.HEADLINE)
+    if not args.names:
+        p.error("give at least one query name, or --all")
+    return args
+
+
 def main() -> None:
     import bench
     import __spark_entry__ as entry
     from crawleria_spark.session import get_spark
 
-    args = [a for a in sys.argv[1:]]
-    plan_tag = None
-    if "--plans" in args:
-        i = args.index("--plans")
-        plan_tag = args[i + 1]
-        del args[i : i + 2]
-    if "--all" in args:
-        names = list(bench.HEADLINE)
-    else:
-        names = args
+    args = parse_args()
+    plan_tag, names = args.plans, args.names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))

@@ -23,7 +23,7 @@ import sys
 
 def _engine(args, spark):
     from crawleria_spark.config import CrawlConfig
-    from crawleria_spark.plans.engine import CrawlEngine
+    from crawleria_spark.plans.engine import CrawlEngine, catalog_seen_kind
     from crawleria_spark.plans.snapshot import SnapshotCatalog
     from crawleria_spark.sources.fetch import synthetic_fetcher
     from crawleria_spark.synthetic.world import WorldConfig, robots_rules
@@ -35,15 +35,14 @@ def _engine(args, spark):
         with open(args.cookies_file) as f:
             cookies = tuple(sorted(json.load(f).items()))
     catalog = SnapshotCatalog(spark, args.catalog)
-    kind = getattr(args, "seen_filter", None)
-    if kind is None:
-        # the AMQ kind is CATALOG state (persisted in manifest meta at
-        # init) — default to it so forget/refresh/resumed crawls against
-        # a cuckoo catalog never silently fall back to bloom bookkeeping
-        meta = catalog.latest_meta()
-        kind = meta.get("seen_filter") or (
-            "cuckoo" if catalog.exists("seen_cuckoo") else "bloom"
-        )
+    # without the flag, default to the catalog's persisted kind so
+    # forget/refresh/resumed crawls against a cuckoo catalog never fall
+    # back to bloom bookkeeping
+    kind = (
+        getattr(args, "seen_filter", None)
+        or catalog_seen_kind(catalog)
+        or CrawlConfig.seen_filter
+    )
     cfg = CrawlConfig(
         max_depth=args.depth,
         max_pages=args.max_pages,

@@ -10,7 +10,6 @@ can switch without changing behavior:
 - max_pages = 50              (config/config.py:31 "max_pages_per_site")
 - respect_robots_txt = True   (config/config.py:32)
 - user_agent                  (config/config.py:33)
-- batch_size = 10             (config/config.py:56)
 - top_k = 5                   (config/config.py:61)
 - similarity_threshold = 0.7  (config/config.py:62)
 - reranking_enabled = True    (config/config.py:63)
@@ -41,9 +40,6 @@ class CrawlConfig:
     retry_attempts: int = 3
     retry_backoff_min_s: float = 2.0
     retry_backoff_max_s: float = 10.0
-
-    # indexing / batching
-    batch_size: int = 10
 
     # retrieval
     top_k: int = 5
@@ -79,7 +75,6 @@ class CrawlConfig:
     # at the 2M bench shape: max/mean task load 2.05 at K=8 -> 1.47 at
     # K=64, count wall 0.47 -> 0.25 s); extra keys cost nothing.
     skew_salt_buckets: int = 64
-    skew_hot_host_fraction: float = 0.10  # host >10% of round → salted
 
     # per-host session config (reference S7: cookies file loaded into the
     # crawler session, src/crawler/crawler.py:45-57). Broadcast with the

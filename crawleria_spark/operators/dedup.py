@@ -662,10 +662,12 @@ def connected_components(
     and on each iteration's ``labels`` truncates the plan to a
     LogicalRDD, so the edge pipeline runs ONCE and each iteration is
     three small shuffles over materialized RDDs (measured: 2.2 s, 137x).
-    It is lazy/construct-safe (no job until the first action) and
-    intermediates live only for this DataFrame's lifetime — nothing is
-    reused across separate invocations. The off switch exists only for
-    plan-shape tests.
+    Construction is EAGER with it on: the early-stop check runs
+    ``first()`` jobs on the label sums before the loop and after each
+    iteration, while this function builds the DataFrame — not at the
+    caller's first action. Intermediates live only for this DataFrame's
+    lifetime — nothing is reused across separate invocations. The off
+    switch exists only for plan-shape tests.
     """
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.union(

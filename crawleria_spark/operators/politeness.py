@@ -13,12 +13,11 @@ The per-host concurrency cap realizes the reference's declared-but-unread
 per round; overflow stays in the frontier for the next round.
 
 Scale note: ``Window.partitionBy(host)`` shuffles one host to one task —
-fine for the long tail, hot for a skewed hub host. ``salted_host_rank``
-provides the skew path: range-partition by (host, order keys) so a hot
-host spans several partitions, then recompose global per-host ranks from
-partition-local ranks + per-(partition, host) count offsets. Order is
-preserved because range partitioning guarantees all rows of partition p
-sort before partition p+1 within a host.
+fine for the long tail, hot for a skewed hub host. ``bucketed_host_rank``
+provides the skew path: bucket rows by their bounded priority ordinal so
+a hot host spans several buckets, then recompose global per-host ranks
+from bucket-local ranks + per-(bucket, host) count offsets. Order is
+preserved because bucket ids are monotonic in priority.
 """
 
 from __future__ import annotations
@@ -33,66 +32,6 @@ def per_host_rank(
     """0-based rank within host by order_cols (plain window; tail path)."""
     w = Window.partitionBy(host_col).orderBy(*[F.col(c) for c in order_cols])
     return df.withColumn(col_name, (F.row_number().over(w) - 1).cast("int"))
-
-
-def salted_host_rank(
-    df: DataFrame,
-    host_col: str,
-    order_cols: list[str],
-    col_name: str = "host_rank",
-    num_partitions: int | None = None,
-    registry: list | None = None,
-) -> DataFrame:
-    """0-based rank within host, skew-safe (no single-task hot host).
-
-    Two-pass: range-partition on (host, *order_cols); per-(pid, host)
-    counts → per-host running offsets (collected — bounded by
-    n_partitions × n_hosts_spanning_boundaries, tiny in practice);
-    partition-local row_number + offset.
-
-    ``registry`` collects the persisted intermediate for caller-side
-    unpersist (it must stay cached between the count and rank passes —
-    see ordinal.with_dense_ordinal for the executor-loss caveat).
-    """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(host_col)] + [F.col(c) for c in order_cols]
-    ranged = df.repartitionByRange(n, *keys).withColumn("__pid", F.spark_partition_id())
-    ranged = ranged.persist()
-    if registry is not None:
-        registry.append(ranged)
-    counts = (
-        ranged.groupBy("__pid", host_col).agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets: dict[tuple[int, str], int] = {}
-    per_host_acc: dict[str, int] = {}
-    for r in sorted(counts, key=lambda r: (r[host_col], r["__pid"])):
-        prior = per_host_acc.get(r[host_col], 0)
-        if prior > 0:  # only hosts spanning a partition boundary need an offset
-            offsets[(r["__pid"], r[host_col])] = prior
-        per_host_acc[r[host_col]] = prior + r["cnt"]
-    if offsets:
-        offset_expr = F.coalesce(
-            F.element_at(
-                F.create_map(
-                    *[
-                        x
-                        for (pid, host), off in offsets.items()
-                        for x in (
-                            F.concat_ws("\u001f", F.lit(pid), F.lit(host)),
-                            F.lit(off),
-                        )
-                    ]
-                ),
-                F.concat_ws("\u001f", F.col("__pid"), F.col(host_col)),
-            ),
-            F.lit(0),
-        )
-    else:
-        offset_expr = F.lit(0)
-    w = Window.partitionBy("__pid", host_col).orderBy(*[F.col(c) for c in order_cols])
-    return ranged.withColumn(
-        col_name, (F.row_number().over(w) - 1 + offset_expr).cast("int")
-    ).drop("__pid")
 
 
 def bucketed_host_rank(
@@ -113,12 +52,12 @@ def bucketed_host_rank(
 
     - no RangePartitioner sampling job (one driver job less per round);
     - deterministic under recompute — a lost block re-derives the same
-      pid, so the count pass and the rank pass can never disagree (the
-      executor-loss caveat of the persist-pinned salted variant);
+      pid, so the count pass and the rank pass can never disagree (no
+      persist has to pin the partitioning between the two passes);
     - pid is monotonic in priority, so per-host offsets accumulated in
       pid order recompose exact global per-host ranks;
     - a hot host still spans many buckets (buckets cut by priority, not
-      host) — same skew-safety as the salted variant;
+      host), so no single task ranks a whole hub host;
     - the count aggregate and the rank window share the (pid, host)
       keys, so Catalyst reuses one exchange for both passes.
     """
@@ -132,10 +71,10 @@ def bucketed_host_rank(
     # aggregate is tiny (≤ buckets × hosts rows), its per-host prefix-sum
     # window runs over that tiny frame, and only hosts that actually span
     # a bucket boundary survive the __off > 0 filter (the long tail of
-    # hosts entirely inside one bucket drops out). Unlike the salted
-    # variant there is NO driver collect and NO literal offset map —
-    # with priority buckets every host may span every boundary, and a
-    # collected map would put buckets × hosts literals in the plan.
+    # hosts entirely inside one bucket drops out). There is NO driver
+    # collect and NO literal offset map — with priority buckets every
+    # host may span every boundary, and a collected map would put
+    # buckets × hosts literals in the plan.
     counts = keyed.groupBy("__pid", host_col).agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = (
         Window.partitionBy(host_col)
@@ -157,29 +96,15 @@ def bucketed_host_rank(
     ).drop("__pid", "__off")
 
 
-def assign_politeness_slots(
-    df: DataFrame,
-    host_col: str = "host",
-    order_cols: list[str] | None = None,
-    skew_safe: bool = False,
-) -> DataFrame:
-    """politeness_slot = 0-based per-host rank by (priority, url_canon)."""
-    order_cols = order_cols or ["priority", "url_canon"]
-    rank_fn = salted_host_rank if skew_safe else per_host_rank
-    return rank_fn(df, host_col, order_cols, col_name="politeness_slot")
-
-
 def apply_host_cap(
     df: DataFrame,
     cap: int,
     host_col: str = "host",
     order_cols: list[str] | None = None,
-    skew_safe: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Split into (within-cap rows, deferred overflow) per host."""
     order_cols = order_cols or ["priority", "url_canon"]
-    rank_fn = salted_host_rank if skew_safe else per_host_rank
-    ranked = rank_fn(df, host_col, order_cols, col_name="__hrank").persist()
+    ranked = per_host_rank(df, host_col, order_cols, col_name="__hrank").persist()
     kept = ranked.filter(F.col("__hrank") < cap).drop("__hrank")
     deferred = ranked.filter(F.col("__hrank") >= cap).drop("__hrank")
     return kept, deferred

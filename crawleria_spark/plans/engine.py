@@ -128,6 +128,23 @@ METRICS_SCHEMA = T.StructType(
 )
 
 
+def catalog_seen_kind(catalog: Catalog) -> str | None:
+    """The AMQ seen-filter kind a catalog holds, or None for a fresh root
+    or a catalog without filter state. The kind is CATALOG state, not
+    per-invocation state: init() persists it in manifest meta, and every
+    later operation (resume / forget / refresh) must use it. Pre-meta
+    catalogs are detected from which filter table exists."""
+    if catalog.latest_version() is None:
+        return None
+    kind = catalog.latest_meta().get("seen_filter")
+    if kind is None:
+        if catalog.exists("seen_cuckoo"):
+            kind = "cuckoo"
+        elif catalog.exists("seen_bloom"):
+            kind = "bloom"
+    return kind
+
+
 class CrawlEngine:
     # forget() waves above this many present keys skip the cuckoo
     # per-key deletion (a bounded driver loop, fine for admin-scale
@@ -199,25 +216,13 @@ class CrawlEngine:
         return self.spark.createDataFrame([], schema)
 
     def _effective_seen_kind(self) -> str:
-        """The AMQ kind this catalog actually holds. The kind is CATALOG
-        state, not per-invocation state: init() persists it in manifest
-        meta, and every later operation (resume / forget / refresh) uses
-        the persisted kind — a `--seen-filter` flag that disagrees with
-        the catalog would otherwise silently skip filter maintenance
-        (catalog.exists('seen_bloom') false under a cuckoo catalog) and
-        drift the filter from the seen table. Pre-meta catalogs are
-        auto-detected from which filter table exists; a disagreeing
-        config warns once and defers to the catalog."""
-        meta = self.catalog.latest_meta() if self.catalog.latest_version() is not None else {}
-        kind = meta.get("seen_filter")
-        if kind is None:  # legacy catalog (or fresh root): detect / config
-            if self.catalog.latest_version() is not None:
-                if self.catalog.exists("seen_cuckoo"):
-                    kind = "cuckoo"
-                elif self.catalog.exists("seen_bloom"):
-                    kind = "bloom"
-            if kind is None:
-                kind = self.config.seen_filter
+        """The AMQ kind this catalog actually holds (catalog_seen_kind),
+        or the config's kind for a catalog without one. A `--seen-filter`
+        flag that disagrees with the catalog would otherwise silently
+        skip filter maintenance (catalog.exists('seen_bloom') false under
+        a cuckoo catalog) and drift the filter from the seen table, so a
+        disagreeing config warns once and defers to the catalog."""
+        kind = catalog_seen_kind(self.catalog) or self.config.seen_filter
         if kind != self.config.seen_filter and not self._kind_warned:
             self._kind_warned = True
             print(
@@ -428,10 +433,7 @@ class CrawlEngine:
         triggers a one-time distributed rebuild of the filter from the
         exact seen table, committed with the fresh stamp."""
         filter_table, build_filter, anti_join, _ = self._seen_filter_ops()
-        has_delta = (
-            self._pending is not None and filter_table in self._pending["append"]
-        )
-        if not (self.use_bloom and (self.catalog.exists(filter_table) or has_delta)):
+        if not (self.use_bloom and self._has_filter(filter_table)):
             return filter_table, anti_join, None
         if self._latest_meta().get("amq_epoch") != FILTER_EPOCH:
             print(
@@ -451,6 +453,81 @@ class CrawlEngine:
             )
         return filter_table, anti_join, self._read_state(filter_table)
 
+    def _has_filter(self, filter_table: str) -> bool:
+        """Whether the logical catalog state (durable manifest or the
+        in-flight round's delta) already holds a seen-filter table."""
+        return self.catalog.exists(filter_table) or (
+            self._pending is not None and filter_table in self._pending["append"]
+        )
+
+    def _delta_tables(
+        self,
+        rnd: int,
+        fetched: DataFrame,
+        narrow: DataFrame,
+        seen: DataFrame | None = None,
+        denied_log: DataFrame | None = None,
+        denied_seen: DataFrame | None = None,
+    ) -> dict[str, DataFrame]:
+        """The documents, fetch_log, seen and host_seq appends of one
+        fetched batch, plus the seen-filter append when ``use_bloom``.
+
+        ``fetched`` is the fetch output with spans; ``narrow`` is a
+        projection of it that carries the fetch-log columns — only the
+        documents delta scans ``fetched``. ``denied_log``/``denied_seen``
+        are the batch's robots denials, logged and seen without a fetch.
+        ``seen`` is the pre-batch seen set when the caller has read it
+        already; it is read here only if the first filter write needs it.
+        """
+        # doc_id comes from the RAW url, like the reference; computed
+        # inside the fetch UDF — no second Python pass here
+        docs = fetched.filter(F.col("status") == "ok").select(
+            "doc_id", "url_canon", F.lit(rnd).alias("round"), "spans"
+        )
+        fetch_log = narrow.select(
+            "url_canon", "host", F.lit(rnd).alias("round"),
+            "politeness_slot", "seq_in_host", "status", "error",
+        )
+        seen_new = narrow.select(
+            "url_canon", "url_hash", F.lit(rnd).alias("first_round")
+        )
+        if denied_log is not None:
+            fetch_log = fetch_log.unionByName(denied_log)
+            seen_new = seen_new.unionByName(denied_seen)
+        tables = {
+            "documents": docs,
+            "fetch_log": fetch_log,
+            "seen": seen_new,
+            "host_seq": narrow.groupBy("host").agg(
+                F.count("*").cast("long").alias("n_fetched")
+            ),
+        }
+        if self.use_bloom:
+            # APPEND the batch-delta filter only, sized for the delta —
+            # both AMQ kinds merge the accumulated rows per bucket
+            # EXECUTOR-side at probe time, collecting only the merged
+            # rows (driver traffic independent of round count). The
+            # previous merge-and-REWRITE of the cumulative filter cost
+            # 8-23 s per round on the 2M-URL bench; this is O(delta)
+            # like every other append. crawl() compacts when
+            # directories pile up.
+            filter_table, build_filter, _, _ = self._seen_filter_ops()
+            filter_src = seen_new.select("url_hash")
+            if not self._has_filter(filter_table):
+                # FIRST filter write of this catalog: it must cover the
+                # ENTIRE seen set, not just this batch's delta. A
+                # catalog bootstrapped with pre-seeded seen rows (no
+                # filter table) would otherwise probe those rows
+                # certainly-new from the next round on — false
+                # negatives, silent duplicate re-fetches. One-time
+                # O(seen) cost; engine-inited catalogs have empty
+                # pre-round seen here so the union is free.
+                if seen is None:
+                    seen = self._read_state("seen")
+                filter_src = seen.select("url_hash").unionByName(filter_src)
+            tables[filter_table] = build_filter(filter_src)
+        return tables
+
     def run_round(self, async_commit: bool = False) -> dict:
         """Execute one crawl round against the latest logical snapshot.
 
@@ -469,19 +546,6 @@ class CrawlEngine:
         itself (deterministic with the synthetic fetcher; a live-HTTP
         deployment that cannot tolerate refetch-on-eviction should run
         pipeline_commits=False or checkpoint the fetch output)."""
-        import os
-
-        profile = os.environ.get("CRAWLERIA_PROFILE") == "1"
-        _last = [time.time()]
-        stage_walls: dict[str, float] = {}
-
-        def _tick(label: str) -> None:
-            now = time.time()
-            stage_walls[label] = round(now - _last[0], 3)
-            if profile:
-                print(f"[round-profile] {label:30s} {now - _last[0]:6.2f}s", flush=True)
-            _last[0] = now
-
         t0 = time.time()
         cfg = self.config
         meta = self._latest_meta()
@@ -647,9 +711,7 @@ class CrawlEngine:
                 df.unpersist()
         round_persists.extend(attempt_persists)
         n_alive = alive.count() if self.collect_stats else -1
-        _tick("dedup anti-join + count")
         n_best = decided.count() if self.collect_stats else -1
-        _tick("best+robots count")
 
         # 5. budget point: p_star = priority of the last taken row WHEN
         # the budget fills (n_kept >= remaining); the dequeue scan never
@@ -679,7 +741,6 @@ class CrawlEngine:
         else:
             to_fetch, p_star = kept, None
             n_to_fetch = n_kept
-        _tick("host cap count")
 
         denied_scanned = (
             denied
@@ -779,8 +840,8 @@ class CrawlEngine:
         # metrics) scans THIS ~50-byte/row cache instead of the wide
         # spans+links cache. With multi-executor deployments the commit's
         # concurrent write jobs otherwise each re-scan the wide cache
-        # with imperfect locality — measured on local-cluster[4]: the
-        # commit stage ran ~3x slower than single-JVM purely from
+        # with imperfect locality — measured with 4 executor JVMs on one
+        # host: the commit stage ran ~3x slower than single-JVM purely from
         # cross-executor block traffic (catalog on tmpfs unchanged, so
         # not the durable-write disk). The wide cache is now scanned
         # only by the documents write and link discovery.
@@ -789,35 +850,6 @@ class CrawlEngine:
             "seq_in_host", "status", "error",
         ).persist()
         round_persists.append(narrow)
-
-        _tick("fetch stage built (lazy)")
-
-        # 8. documents append (doc_id from the RAW url, like the reference;
-        #    computed inside the fetch UDF — no second Python pass here)
-        docs = fetched.filter(F.col("status") == "ok").select(
-            "doc_id",
-            "url_canon",
-            F.lit(rnd).alias("round"),
-            "spans",
-        )
-
-        fetch_log_new = narrow.select(
-            "url_canon",
-            "host",
-            F.lit(rnd).alias("round"),
-            "politeness_slot",
-            "seq_in_host",
-            "status",
-            "error",
-        ).unionByName(denied_log)
-
-        seen_new = narrow.select(
-            "url_canon", "url_hash", F.lit(rnd).alias("first_round")
-        ).unionByName(denied_seen)
-
-        host_seq_delta = narrow.groupBy("host").agg(
-            F.count("*").cast("long").alias("n_fetched")
-        )
 
         # 9. discovery: ok pages under the depth bound, links in page order
         parents = fetched.filter(
@@ -837,7 +869,6 @@ class CrawlEngine:
         cand = self._domain_filter(cand).persist()
         round_persists.append(cand)  # `cand` is rebound below — track the
         n_cand = cand.count()        # persisted plan itself for release
-        _tick("fetch + discovery count")
         if n_cand > 0:
             # discovery order keys are (parent_priority, link_offset)
             # with parent_priority < next_priority — the bucketed ordinal
@@ -901,7 +932,6 @@ class CrawlEngine:
         )
         n_fetch_rows = sum(r["n_dequeued"] for r in part_rows)
         n_errors = sum(r["n_errors"] for r in part_rows)
-        _tick("error agg")
         wall_ms = int((time.time() - t0) * 1000)
         metrics_rows = [
             (rnd, r["partition"], r["n_dequeued"], 0, r["n_fetched"], r["n_errors"], 0, wall_ms)
@@ -921,36 +951,12 @@ class CrawlEngine:
         metrics_df = self.spark.createDataFrame(metrics_rows, schema=METRICS_SCHEMA)
 
         fetched_total += n_fetch_rows
-        _tick("pre-commit")
-        append_tables = {
-            "documents": docs,
-            "fetch_log": fetch_log_new,
-            "seen": seen_new,
-            "host_seq": host_seq_delta,
-            "metrics": metrics_df,
-        }
-        if self.use_bloom:
-            # APPEND the round-delta filter only, sized for the delta —
-            # both AMQ kinds merge the accumulated rows per bucket
-            # EXECUTOR-side at probe time, collecting only the merged
-            # rows (driver traffic independent of round count). The
-            # previous merge-and-REWRITE of the cumulative filter cost
-            # 8-23 s per round on the 2M-URL bench; this is O(delta)
-            # like every other append. crawl() compacts when
-            # directories pile up.
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            filter_src = seen_new.select("url_hash")
-            if bloom_df is None:
-                # FIRST filter write of this catalog: it must cover the
-                # ENTIRE seen set, not just this round's delta. A
-                # catalog bootstrapped with pre-seeded seen rows (no
-                # filter table) would otherwise probe those rows
-                # certainly-new from the next round on — false
-                # negatives, silent duplicate re-fetches. One-time
-                # O(seen) cost; engine-inited catalogs have empty
-                # pre-round seen here so the union is free.
-                filter_src = seen.select("url_hash").unionByName(filter_src)
-            append_tables[filter_table] = build_filter(filter_src)
+        # 8. documents/fetch_log/seen/host_seq (+ filter) deltas; all but
+        #    documents scan the narrow cache
+        append_tables = self._delta_tables(
+            rnd, fetched, narrow, seen, denied_log=denied_log, denied_seen=denied_seen
+        )
+        append_tables["metrics"] = metrics_df
         if n_cand > 0:
             append_tables["frontier"] = new_rows
         new_meta = self._carry_meta(
@@ -970,7 +976,6 @@ class CrawlEngine:
         # must version strictly in round order, and its deltas become
         # durable dirs this round's plans can recompute from
         self.flush()
-        _tick("commit barrier (prev round)")
         if async_commit:
             # Overlay copies are LAZY LOCAL CHECKPOINTS: they truncate
             # the next round's plan lineage at this round's boundary, so
@@ -999,17 +1004,14 @@ class CrawlEngine:
                 "base_version": base_version,
                 "persists": [fetched, *round_persists],
             }
-            _tick("commit (launch async)")
         else:
             self.catalog.commit(append=append_tables, meta=new_meta)
-            _tick("commit (all writes)")
         # gross row count (live + not-yet-compacted dequeued rows) — an
         # upper bound on the live frontier, NOT an exact live count
         # (which would cost an anti-join per round). Pure arithmetic:
         # rows at round start + rows appended this round (the frontier
         # only ever changes by appends between compactions).
         n_pending = pending_bound + n_cand
-        _tick("pending count")
         if not async_commit:
             for df in (fetched, *round_persists):
                 df.unpersist()
@@ -1023,7 +1025,6 @@ class CrawlEngine:
             # round would be identical (the gross frontier can be
             # non-empty while every row is dead/capped) — stop.
             "stopped": n_fetch_rows == 0 and n_cand == 0,
-            "stage_walls": stage_walls,
             # accepted head cutoff (None = full-frontier scan)
             "head_cutoff": cutoff,
         }
@@ -1258,35 +1259,8 @@ class CrawlEngine:
                 politeness_delay_s=cfg.politeness_delay_s,
             )
         ).persist()
-        append_tables = {
-            "documents": fetched.filter(F.col("status") == "ok").select(
-                "doc_id", "url_canon", F.lit(rnd).alias("round"), "spans"
-            ),
-            "fetch_log": fetched.select(
-                "url_canon", "host", F.lit(rnd).alias("round"),
-                "politeness_slot", "seq_in_host", "status", "error",
-            ),
-            "seen": fetched.select(
-                "url_canon", "url_hash", F.lit(rnd).alias("first_round")
-            ),
-            "host_seq": fetched.groupBy("host").agg(
-                F.count("*").cast("long").alias("n_fetched")
-            ),
-        }
-        if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            filter_src = fetched.select("url_hash")
-            if not self.catalog.exists(filter_table):
-                # first filter write must cover the whole seen set (same
-                # bootstrapped-catalog false-negative hazard as
-                # run_round's first filter append)
-                filter_src = (
-                    self.catalog.read("seen").select("url_hash")
-                    .unionByName(filter_src)
-                )
-            append_tables[filter_table] = build_filter(filter_src)
         self.catalog.commit(
-            append=append_tables,
+            append=self._delta_tables(rnd, fetched, fetched),
             meta=self._carry_meta(
                 round=rnd,
                 next_priority=next_priority + 1,

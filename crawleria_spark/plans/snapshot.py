@@ -78,13 +78,8 @@ class SnapshotCatalog(Catalog):
         return self.spark.read.parquet(*m["tables"][table])
 
     def _write_dir(self, name: str, df: DataFrame, version: int) -> str:
-        import time
-
         data_dir = os.path.join(self.root, name, f"v{version:06d}_{uuid.uuid4().hex[:8]}")
-        t0 = time.time()
         df.write.mode("overwrite").parquet(data_dir)
-        if os.environ.get("CRAWLERIA_PROFILE") == "1":
-            print(f"[commit-profile] write {name:12s} {time.time() - t0:6.2f}s", flush=True)
         return data_dir
 
     def commit(

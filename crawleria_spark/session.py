@@ -19,17 +19,8 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    executors: int | None = None,
-    executor_mem_mb: int = 16384,
 ) -> SparkSession:
-    """``executors=None`` (default): ``local[cores]`` — one JVM, fast
-    startup, the test/dev mode. ``executors=k``: ``local-cluster[k,
-    cores, executor_mem_mb]`` — k REAL executor JVMs with separate heaps
-    (here ``cores`` means cores PER executor). The latter models a real
-    cluster's failure/GC/memory isolation: a single shared local[N] heap
-    serializes all N task threads behind one garbage collector, which is
-    exactly why production executors are sized at 4-8 cores — and why
-    scaling evidence at high N uses executor mode."""
+    """A ``local[cores]`` session: one JVM, fast startup."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -53,13 +44,8 @@ def get_spark(
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         local_dir = "/dev/shm/crawleria_spark_local"
         os.makedirs(local_dir, exist_ok=True)
-    master = (
-        f"local-cluster[{executors},{cores},{executor_mem_mb}]"
-        if executors
-        else f"local[{cores}]"
-    )
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -87,21 +73,6 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    if executors:
-        # worker JVMs don't inherit the driver env reliably — ship the
-        # repo path to executor-side Python workers explicitly
-        builder = builder.config("spark.executorEnv.PYTHONPATH", pkg_root)
-        # the local-cluster master string sets WORKER capacity only;
-        # executors would otherwise run with the 1g default heap
-        builder = builder.config("spark.executor.memory", f"{executor_mem_mb}m")
-        # every executor JVM on one box sees all physical cores and sizes
-        # its GC/JIT/netty pools for them — k executors each spawning
-        # 32-wide pools oversubscribe the machine (measured 2x round
-        # slowdown). On a real cluster the container runtime sets this.
-        builder = builder.config(
-            "spark.executor.extraJavaOptions",
-            f"-XX:ActiveProcessorCount={cores}",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -10,7 +10,7 @@ process/index lifecycle (SURVEY.md §3.2):
 Spark shape: one declarative job — ``binaryFile`` source (pattern
 pushdown at the file listing) → Arrow-batched decode/resize/feature
 stages → quarantine split → idempotent snapshot append. Batching is
-Arrow record batches (the engine's ``batch_size`` analogue); the
+Arrow record batches (the analogue of the reference's ``batch_size``); the
 reference's 1 s inter-batch sleep (F3) is a rate-limit for a remote
 indexer and is a no-op here — appends are bulk.
 """

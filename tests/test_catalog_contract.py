@@ -4,12 +4,9 @@ This is the executable form of SURVEY.md §4's "swap in real Iceberg"
 claim: the engine touches storage only through the `Catalog` ABC
 (crawleria_spark/plans/catalog.py), so any implementation that passes
 this suite — SnapshotCatalog (production), MemoryCatalog (driver-memory
-double), an Iceberg-backed catalog (needs the runtime jar, absent in
-this offline sandbox) — runs the identical crawl. The final test proves
+double) — runs the identical crawl. The final test proves
 that end-to-end by crawling the same world on two backends and
 comparing the full committed state."""
-
-import uuid
 
 import pytest
 from pyspark.sql import Row, types as T
@@ -17,7 +14,6 @@ from pyspark.sql import Row, types as T
 from crawleria_spark.config import CrawlConfig
 from crawleria_spark.plans.catalog import MemoryCatalog
 from crawleria_spark.plans.engine import CrawlEngine
-from crawleria_spark.plans.iceberg import IcebergCatalog
 from crawleria_spark.plans.snapshot import SnapshotCatalog
 from crawleria_spark.sources.fetch import synthetic_fetcher
 from crawleria_spark.synthetic.world import WorldConfig, robots_rules, seed_urls
@@ -30,22 +26,14 @@ SCHEMA = T.StructType(
 )
 
 
-@pytest.fixture(params=["snapshot", "memory", "iceberg"])
+@pytest.fixture(params=["snapshot", "memory"])
 def make_catalog(request, spark, tmp_path):
-    if request.param == "iceberg" and not IcebergCatalog.available(spark):
-        pytest.skip("iceberg-spark-runtime jar not on the session classpath")
     counter = [0]
 
     def factory():
         counter[0] += 1
         if request.param == "snapshot":
             return SnapshotCatalog(spark, str(tmp_path / f"cat{counter[0]}"))
-        if request.param == "iceberg":
-            return IcebergCatalog(
-                spark,
-                namespace=f"ns_{uuid.uuid4().hex[:8]}",
-                warehouse=str(tmp_path / "warehouse"),
-            )
         return MemoryCatalog(spark)
 
     return factory
@@ -143,20 +131,10 @@ def test_memory_catalog_rejects_streaming(spark):
         MemoryCatalog(spark).published_path("fetch_log")
 
 
-def test_iceberg_gated_not_stubbed(spark):
-    """Without the jar, IcebergCatalog must refuse loudly at
-    construction (not half-work); with it, the suite above runs."""
-    if IcebergCatalog.available(spark):
-        pytest.skip("jar present — the parametrized suite covers it")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        IcebergCatalog(spark, namespace="x")
-
-
 def test_engine_crawl_identical_across_backends(spark, tmp_path):
     """The conformance capstone: the SAME crawl (seeds, world, robots,
-    budgets, pipelined commits) over every available backend
-    (SnapshotCatalog, MemoryCatalog, IcebergCatalog when the jar is on
-    the classpath) must commit identical fetch_log / seen / documents
+    budgets, pipelined commits) over both backends (SnapshotCatalog,
+    MemoryCatalog) must commit identical fetch_log / seen / documents
     state — the engine is storage-agnostic through the Catalog ABC."""
     world = WorldConfig(seed=11, n_hosts=5, pages_per_host=20, mean_links=4)
     cfg = CrawlConfig(max_depth=2, max_pages=30, max_concurrent_per_host=3)
@@ -176,14 +154,6 @@ def test_engine_crawl_identical_across_backends(spark, tmp_path):
         return log, seen, docs, (meta["round"], meta["fetched_total"])
 
     backends = [SnapshotCatalog(spark, str(tmp_path / "snap")), MemoryCatalog(spark)]
-    if IcebergCatalog.available(spark):
-        backends.append(
-            IcebergCatalog(
-                spark,
-                namespace=f"crawl_{uuid.uuid4().hex[:8]}",
-                warehouse=str(tmp_path / "warehouse"),
-            )
-        )
     states = {}
     for cat in backends:
         eng = CrawlEngine(
@@ -195,26 +165,3 @@ def test_engine_crawl_identical_across_backends(spark, tmp_path):
     base = states["SnapshotCatalog"]
     for name, st in states.items():
         assert st == base, name
-
-
-def test_iceberg_pinned_snapshot_set_jarless():
-    """gc()'s reclaim safety set, computed without the jar: every
-    surviving manifest's read pin AND per-append segment ids must be in
-    the never-expire set — including the crashed-commit / replace+append
-    shapes the r6 ADVICE flagged against retain_last-based expiry."""
-    manifests = [
-        {  # older surviving version: table a at snapshot 10 (appends 9,10)
-            "tables": {"a": ["9", "10"], "b": ["100"]},
-            "pins": {"a": 10, "b": 100},
-        },
-        {  # newer version: a replaced (new pin 20), b appended (101)
-            "tables": {"a": ["20"], "b": ["100", "101"]},
-            "pins": {"a": 20, "b": 101},
-        },
-    ]
-    pinned = IcebergCatalog._pinned_snapshot_ids(manifests)
-    assert pinned == {"a": {9, 10, 20}, "b": {100, 101}}
-    # a retain_last=2 policy on table a would keep only {10, 20} and
-    # expire 9 — and with an extra orphan snapshot it would drop 10 too;
-    # the pinned set is what guarantees read_as_of(v_old) keeps working
-    assert 9 in pinned["a"] and 10 in pinned["a"]

@@ -71,6 +71,30 @@ def test_cli_forget_recrawl(spark, tmp_path, capsys):
     assert second["fetched"] > first["fetched"]  # the re-fetch happened
 
 
+def test_cli_seen_filter_kind_comes_from_catalog(spark, tmp_path, capsys):
+    """Without --seen-filter, resume and forget use the kind the catalog
+    was crawled with: no kind-mismatch warning, the filter stays a
+    cuckoo table, and it keeps covering exactly the seen rows."""
+    from crawleria_spark.plans.snapshot import SnapshotCatalog
+
+    cat = str(tmp_path / "cli_kind")
+    seed = "https://hub.example.com/p/0"
+    main(["--catalog", cat, "crawl", seed, "--depth", "1",
+          "--max-pages", "4", "--max-rounds", "1", "--seen-filter", "cuckoo"])
+    capsys.readouterr()
+    main(["--catalog", cat, "crawl", seed, "--depth", "1",
+          "--max-pages", "8", "--max-rounds", "1", "--resume"])
+    assert main(["--catalog", cat, "forget", seed]) == 0
+    out = capsys.readouterr().out
+    assert "requested" not in out
+    assert json.loads(out.strip().splitlines()[-1])["forgotten"] == 1
+    catalog = SnapshotCatalog(spark, cat)
+    assert catalog.latest_meta()["seen_filter"] == "cuckoo"
+    assert catalog.exists("seen_cuckoo") and not catalog.exists("seen_bloom")
+    n_items = sum(r["n_items"] for r in catalog.read("seen_cuckoo").collect())
+    assert n_items == catalog.read("seen").count()
+
+
 def test_cli_process(spark, tmp_path, capsys):
     d = tmp_path / "shots"
     d.mkdir()

@@ -97,7 +97,7 @@ def test_engine_matches_oracle(spark, std_catalog):
 
 @pytest.mark.usefixtures("spark")
 def test_engine_matches_oracle_skew_safe(spark, tmp_catalog_root):
-    """Same parity with the skew-safe (salted) rank path switched on."""
+    """Same parity with the skew-safe (bucketed) rank path switched on."""
     world = WorldConfig(seed=11, n_hosts=6, pages_per_host=30, hub_host_prob=0.6)
     config = CrawlConfig(max_depth=2, max_pages=50, max_concurrent_per_host=4)
     seeds = seed_urls(world, n=3)

@@ -1,16 +1,12 @@
-"""Three-implementation agreement for per-host ranking: the plain
-window (tail path), the persist-pinned salted range variant, and the
-deterministic priority-bucket variant the engine uses (recompute-safe,
-no sampling job). All must assign identical politeness slots."""
+"""Two-implementation agreement for per-host ranking: the plain
+window (tail path, the reference) and the deterministic priority-bucket
+variant the engine uses (recompute-safe, no sampling job). Both must
+assign identical politeness slots."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from crawleria_spark.operators.politeness import (
-    bucketed_host_rank,
-    per_host_rank,
-    salted_host_rank,
-)
+from crawleria_spark.operators.politeness import bucketed_host_rank, per_host_rank
 
 
 @pytest.fixture(scope="module")
@@ -39,20 +35,13 @@ def _slots(df):
 def test_rank_variants_agree(spark, skewed):
     order = ["priority", "url_canon"]
     plain = _slots(per_host_rank(skewed, "host", order, col_name="slot"))
-    reg: list = []
-    salted = _slots(
-        salted_host_rank(skewed, "host", order, col_name="slot", registry=reg)
-    )
     bucketed = _slots(
         bucketed_host_rank(
             skewed, "host", "priority", order,
             priority_bound=20_000, col_name="slot", num_buckets=16,
         )
     )
-    for df in reg:
-        df.unpersist()
     assert bucketed == plain
-    assert salted == plain
     # sanity: hub host rank really is a dense 0..m-1 sequence
     hub = sorted(v for k, v in plain.items() if "hub" in k)
     assert hub == list(range(len(hub)))
