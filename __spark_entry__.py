@@ -407,7 +407,8 @@ def q_dedup_anti_join_cuckoo(spark, sf_dir):
     split off map-side by a broadcast fingerprint probe, only the
     ~1.2e-4-rate suspects reach the exact anti-join shuffle. Zero false
     negatives ⇒ the oracle is the plain exact anti-join SQL."""
-    from crawleria_spark.operators.cuckoo import anti_join_seen_cuckoo, build_cuckoo
+    from crawleria_spark.operators.bloom import anti_join_seen
+    from crawleria_spark.operators.cuckoo import build_cuckoo
 
     orders = _t(spark, sf_dir, "orders")
     pending = orders.select(
@@ -417,7 +418,7 @@ def q_dedup_anti_join_cuckoo(spark, sf_dir):
     cf = build_cuckoo(
         seen.select("url_hash"), n_buckets=8, capacity_per_bucket=200_000
     )
-    alive = anti_join_seen_cuckoo(pending, seen, cf, n_buckets=8)
+    alive = anti_join_seen(pending, seen, cf, n_buckets=8)
     return alive.select(
         F.col("url_canon").cast("long").alias("o_orderkey")
     ).orderBy("o_orderkey")

@@ -35,9 +35,9 @@ def _engine(args, spark):
         with open(args.cookies_file) as f:
             cookies = tuple(sorted(json.load(f).items()))
     catalog = SnapshotCatalog(spark, args.catalog)
-    # without the flag, default to the catalog's persisted kind so
-    # forget/refresh/resumed crawls against a cuckoo catalog never fall
-    # back to bloom bookkeeping
+    # without the flag (only `crawl` has one), default to the catalog's
+    # persisted kind so forget/refresh/resumed crawls against a cuckoo
+    # catalog never fall back to bloom bookkeeping
     kind = (
         getattr(args, "seen_filter", None)
         or catalog_seen_kind(catalog)
@@ -85,7 +85,11 @@ def cmd_crawl(args, spark) -> dict:
         "total_rounds": int(catalog.latest_meta().get("round", -1)) + 1,
         "fetched": log.filter("status in ('ok','error')").count(),
         "documents": catalog.read("documents").count(),
-        "pending": catalog.read("frontier").count(),
+        # the frontier is append-only: fetched/denied rows leave it only
+        # logically, through `seen`, so pending is the live set
+        "pending": catalog.read("frontier")
+        .join(catalog.read("seen").select("url_canon"), "url_canon", "left_anti")
+        .select("url_canon").distinct().count(),
         "catalog": args.catalog,
     }
 
@@ -239,16 +243,12 @@ def build_parser() -> argparse.ArgumentParser:
     fg.add_argument("urls", nargs="+")
     fg.add_argument("--no-requeue", action="store_true",
                     help="only un-see; re-fetch happens on re-discovery")
-    fg.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                    help="default: the catalog's persisted kind")
     fg.set_defaults(depth=3, max_pages=50, allowed_domains=None)
 
     rf = sub.add_parser("refresh", help="TTL re-crawl: un-see + re-enqueue "
                         "pages first fetched more than N rounds ago")
     rf.add_argument("--max-age-rounds", type=int, required=True)
     rf.add_argument("--no-requeue", action="store_true")
-    rf.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default=None,
-                    help="default: the catalog's persisted kind")
     rf.set_defaults(depth=3, max_pages=50, allowed_domains=None)
 
     pr = sub.add_parser("process")

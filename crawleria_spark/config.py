@@ -59,11 +59,13 @@ class CrawlConfig:
     # fpp 0.01, no deletion); "cuckoo" = operators/cuckoo.py (~2.4
     # bytes/key capacity, probe fpp ≈ 1.2e-4, supports DELETION —
     # required by CrawlEngine.forget's O(filter) re-crawl path).
-    # Active only when the engine is built with use_bloom=True.
+    # Active only when the engine is built with use_bloom=True. Both
+    # kinds are probed by the one split/anti-join in operators/bloom.py
+    # (the filter table's blob column names the kind).
     # Measured (BENCH/BASELINE.md round-4 filter A/B + kernel profile,
     # 2M URLs): the two kinds are throughput-equivalent — the probe is
     # ~1 s/2M keys on one core, invisible in a round. Pick cuckoo when
-    # the deployment uses forget/refresh (O(filter) deletion); bloom
+    # the deployment uses forget (O(filter) deletion); bloom
     # otherwise (half the state bytes/key). The kind persists in
     # catalog meta at init, so decide it once per catalog.
     seen_filter: str = "bloom"

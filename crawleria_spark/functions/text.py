@@ -50,10 +50,6 @@ def word_token_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(_c(text), F.lit(_WORD_RE), 0))
 
 
-def char_count(text: Column | str) -> Column:
-    return F.length(_c(text))
-
-
 def punct_ratio(text: Column | str) -> Column:
     t = _c(text)
     n_punct = F.length(t) - F.length(F.regexp_replace(t, _PUNCT_RE, ""))
@@ -86,12 +82,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     """Document fingerprint: md5 over normalized text (oracle-mirrorable)."""
     norm = F.lower(F.trim(F.regexp_replace(_c(text), r"\s+", " ")))
     return F.md5(norm)
-
-
-def fingerprint_xxhash(text: Column | str) -> Column:
-    """64-bit fast fingerprint (JVM xxhash64; engine-internal use)."""
-    norm = F.lower(F.trim(F.regexp_replace(_c(text), r"\s+", " ")))
-    return F.xxhash64(norm)
 
 
 def _bind(arr: Column, fn) -> Column:

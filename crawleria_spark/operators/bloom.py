@@ -192,9 +192,23 @@ def compact_blooms(df: DataFrame) -> DataFrame:
     )
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Byte-wise OR per partition of two bloom tables."""
-    return compact_blooms(a.unionByName(b))
+def _kind_ops(filter_df: DataFrame, fpp: float):
+    """(blob column, compact step, per-blob probe) of a seen-filter table.
+
+    Both AMQ kinds store ``(partition, blob, n_items)`` rows and the blob
+    column names the kind (``bloom`` or ``cuckoo``), so one split and one
+    anti-join serve both; a kind contributes only its executor-side
+    compact step and its vectorized ``probe(blob, hashes) -> bool[]``."""
+    if "cuckoo" in filter_df.columns:
+        from crawleria_spark.operators import cuckoo
+
+        return "cuckoo", cuckoo.compact_cuckoo, cuckoo._probe
+    k = bloom_k(fpp)
+
+    def probe(blob: bytes, h: np.ndarray) -> np.ndarray:
+        return _test_bits(np.frombuffer(blob, dtype=np.uint8), _indexes(h, len(blob) * 8, k))
+
+    return "bloom", compact_blooms, probe
 
 
 def bloom_split(
@@ -206,21 +220,23 @@ def bloom_split(
     fpp: float = 0.01,
     registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(certainly-new rows, bloom-positive suspects).
+    """(certainly-new rows, filter-positive suspects) — for either AMQ
+    kind (``_kind_ops``); ``fpp`` only matters to a bloom.
 
-    The accumulated delta-bloom rows are OR'd EXECUTOR-side first
-    (``compact_blooms`` — one applyInPandas job over the blob rows), so
+    The accumulated delta rows are merged EXECUTOR-side first (the
+    kind's compact step — one applyInPandas job over the blob rows), so
     the driver collects at most n_buckets × size-classes merged rows
-    (≈ n_buckets × m/8 bytes) INDEPENDENT of how many un-compacted round
-    deltas the append table holds. A key is "maybe seen" if ANY blob of
-    its bucket tests positive — OR-probing across size classes is
-    equivalent to membership in the union of the deltas, so no false
-    negatives regardless of per-round bloom sizing.
+    (≈ n_buckets × m/8 bytes for a bloom, one row per partition for a
+    cuckoo) INDEPENDENT of how many un-compacted round deltas the append
+    table holds. A key is "maybe seen" if ANY blob of its bucket tests
+    positive — OR-probing across bloom size classes is equivalent to
+    membership in the union of the deltas, so no false negatives
+    regardless of per-round filter sizing.
     """
-    k = bloom_k(fpp)
+    blob_col, compact, probe = _kind_ops(bloom_df, fpp)
     blobs: dict[int, list[bytes]] = {}
-    for r in compact_blooms(bloom_df).collect():
-        blobs.setdefault(int(r["partition"]), []).append(bytes(r["bloom"]))
+    for r in compact(bloom_df).collect():
+        blobs.setdefault(int(r["partition"]), []).append(bytes(r[blob_col]))
     sc = pending.sparkSession.sparkContext
     bc = sc.broadcast(blobs)
 
@@ -236,9 +252,7 @@ def bloom_split(
             sel = buckets == bucket
             hits = np.zeros(int(sel.sum()), dtype=bool)
             for blob in bucket_blobs:
-                bits = np.frombuffer(blob, dtype=np.uint8)
-                m = len(blob) * 8
-                hits |= _test_bits(bits, _indexes(h[sel], m, k))
+                hits |= probe(blob, h[sel])
             out[sel] = hits
         return pd.Series(out)
 
@@ -264,11 +278,12 @@ def anti_join_seen(
     fpp: float = 0.01,
     registry: list | None = None,
 ) -> DataFrame:
-    """frontier LEFT ANTI JOIN seen, with optional bloom pre-filter.
+    """frontier LEFT ANTI JOIN seen, with an optional bloom or cuckoo
+    pre-filter (``bloom_df``, either kind).
 
-    With a bloom, the exact anti-join shuffle carries only the suspects;
-    the result set is identical (no false negatives) either way.
-    ``registry`` collects the bloom split's persisted intermediate for
+    With a filter, the exact anti-join shuffle carries only the
+    suspects; the result set is identical (no false negatives) either
+    way. ``registry`` collects the split's persisted intermediate for
     caller-side unpersist after the round.
     """
     if bloom_df is None:

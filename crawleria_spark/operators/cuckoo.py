@@ -3,7 +3,10 @@
 The north rule names a "bloom/cuckoo-filter URL-seen set"; bloom.py is
 the default implementation. This module is the cuckoo alternative with
 the SAME delta-append architecture and anti-join contract (zero false
-negatives ⇒ identical dedup results), plus the capability a bloom
+negatives ⇒ identical dedup results) — it is probed by the same
+``bloom.bloom_split``/``bloom.anti_join_seen``, which recognise a cuckoo
+table by its ``cuckoo`` blob column and use this module's
+``compact_cuckoo`` and per-blob ``_probe`` — plus the capability a bloom
 fundamentally lacks: DELETION. ``CrawlEngine.forget`` uses it to un-see
 URLs for re-crawl/refresh scheduling by editing O(filter-bytes) of
 fingerprints instead of re-hashing the entire seen set the way the
@@ -329,8 +332,9 @@ def build_cuckoo(
 
 def compact_cuckoo(df: DataFrame) -> DataFrame:
     """Merge accumulated delta rows into one row per partition —
-    executor-side (applyInPandas), like compact_blooms. Also the step
-    that makes deletion safe (single-row occurrence semantics)."""
+    executor-side (applyInPandas), like compact_blooms; bloom_split's
+    compact step for cuckoo tables. Also the step that makes deletion
+    safe (single-row occurrence semantics)."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
@@ -342,74 +346,6 @@ def compact_cuckoo(df: DataFrame) -> DataFrame:
         )
 
     return df.groupBy("partition").applyInPandas(merge, schema=CUCKOO_SCHEMA)
-
-
-def cuckoo_split(
-    pending: DataFrame,
-    cuckoo_df: DataFrame,
-    hash_col: str = "url_hash",
-    n_buckets: int = 32,
-    registry: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(certainly-new rows, filter-positive suspects).
-
-    Mirrors bloom_split: delta rows are merged EXECUTOR-side first, so
-    the driver collects exactly one O(min(6·entries, 8·m))-byte row per
-    partition independent of accumulated round count, then the merged
-    filters broadcast to an Arrow-vectorized probe. Stash entries probe
-    too ⇒ zero false negatives at any load."""
-    blobs = {
-        int(r["partition"]): bytes(r["cuckoo"])
-        for r in compact_cuckoo(cuckoo_df).collect()
-    }
-    sc = pending.sparkSession.sparkContext
-    bc = sc.broadcast(blobs)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(hashes: pd.Series) -> pd.Series:
-        h = hashes.to_numpy(dtype=np.int64)
-        buckets = np.mod(h, n_buckets)
-        out = np.zeros(len(h), dtype=bool)
-        for bucket in np.unique(buckets):
-            blob = bc.value.get(int(bucket))
-            if blob is None:
-                continue
-            sel = buckets == bucket
-            out[sel] = _probe(blob, h[sel])
-        return pd.Series(out)
-
-    flagged = pending.withColumn("__maybe_seen", maybe_seen(F.col(hash_col)))
-    if registry is not None:
-        # persist only when the caller can unpersist (see bloom_split) —
-        # registry-less invocations (oracle queries, tests) trade a
-        # second probe pass for zero leaked cached plans
-        flagged = flagged.persist()
-        registry.append(flagged)
-    certain_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    suspects = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    return certain_new, suspects
-
-
-def anti_join_seen_cuckoo(
-    pending: DataFrame,
-    seen: DataFrame,
-    cuckoo_df: DataFrame | None = None,
-    n_buckets: int = 32,
-    capacity_per_bucket: int = 1_000_000,
-    fpp: float = 0.0,  # signature-compatible with the bloom path; unused
-    registry: list | None = None,
-) -> DataFrame:
-    """frontier LEFT ANTI JOIN seen with a cuckoo pre-filter.
-
-    Identical results to the exact anti-join (zero false negatives);
-    the exact join's shuffle carries only the ~1.2e-4-rate suspects."""
-    if cuckoo_df is None:
-        return pending.join(seen.select("url_canon"), "url_canon", "left_anti")
-    certain_new, suspects = cuckoo_split(
-        pending, cuckoo_df, "url_hash", n_buckets, registry=registry
-    )
-    confirmed = suspects.join(seen.select("url_canon"), "url_canon", "left_anti")
-    return certain_new.unionByName(confirmed)
 
 
 def delete_hashes(

@@ -484,6 +484,12 @@ def embedding_dup_pairs_lsh(
     r6: the hyperplanes are generated executor-side, once per task,
     from (seed, dim) — dim inferred from the first Arrow batch when not
     passed (identical planes everywhere: same seed, same generator).
+    Bucket parity across executors therefore assumes every executor's
+    numpy yields the same ``default_rng(seed)`` bitstream: executors
+    with different numpy builds could bucket the same vector
+    differently, silently lowering recall with no error. Fine for one
+    environment; a heterogeneous cluster would need planes derived from
+    a version-independent hash of the seed (e.g. SplitMix64).
     The previous driver-side ``df.select(vec_col).first()`` was an
     eager Spark action during plan CONSTRUCTION (the defect class the
     r5 footer-stats work removed from q_pack_sequences); building the

@@ -88,40 +88,36 @@ class Retriever:
         top_k = cfg.top_k if top_k is None else top_k
         threshold = cfg.similarity_threshold if threshold is None else threshold
 
-        cache_key = f"{search_type}|{query_text}|{query_vec}|{top_k}|{threshold}"
-        if self.cache is not None:
-            hit = self.cache.lookup(cache_key, now)
-            if hit is not None:
-                return hit
-
-        scored = self.docs.withColumn(
-            "score", self._score(query_text, query_vec, search_type)
-        )
-        result = threshold_topk(scored, "score", threshold, top_k, [self.id_col])
-
-        # A7 rerank: second scoring stage. The reference gates this on
-        # ">1 result" (retriever.py:154-159) because its rerank is an
-        # LLM call per row; here it is a lazy column expression, and for
-        # n <= 1 the reranked order/rank are trivially identical to the
-        # original — so applying it unconditionally preserves the
-        # reference's observable semantics while keeping retrieve()
-        # action-free (the old `result.count()` was the only Spark job
-        # in the uncached hot path that existed purely to branch).
-        if cfg.reranking_enabled and rerank_score is not None:
-            w = Window.orderBy(F.col("rerank_score").desc(), F.col(self.id_col))
-            result = (
-                result.withColumn("rerank_score", rerank_score)
-                .withColumn("rank", F.row_number().over(w))
+        def compute() -> DataFrame:
+            scored = self.docs.withColumn(
+                "score", self._score(query_text, query_vec, search_type)
             )
+            result = threshold_topk(scored, "score", threshold, top_k, [self.id_col])
 
-        # J1/J2 media enrichment (+ P7 existence filter) when media exists
-        if self.media is not None:
-            result = enrich_with_media(result, self.media, key=self.id_col)
+            # A7 rerank: second scoring stage. The reference gates this on
+            # ">1 result" (retriever.py:154-159) because its rerank is an
+            # LLM call per row; here it is a lazy column expression, and for
+            # n <= 1 the reranked order/rank are trivially identical to the
+            # original — so applying it unconditionally preserves the
+            # reference's observable semantics while keeping retrieve()
+            # action-free (the old `result.count()` was the only Spark job
+            # in the uncached hot path that existed purely to branch).
+            if cfg.reranking_enabled and rerank_score is not None:
+                w = Window.orderBy(F.col("rerank_score").desc(), F.col(self.id_col))
+                result = (
+                    result.withColumn("rerank_score", rerank_score)
+                    .withColumn("rank", F.row_number().over(w))
+                )
 
-        if self.cache is not None:
-            self.cache.store(cache_key, result, now)
-            return self.cache.lookup(cache_key, now)
-        return result
+            # J1/J2 media enrichment (+ P7 existence filter) when media exists
+            if self.media is not None:
+                result = enrich_with_media(result, self.media, key=self.id_col)
+            return result
+
+        if self.cache is None:
+            return compute()
+        cache_key = f"{search_type}|{query_text}|{query_vec}|{top_k}|{threshold}"
+        return self.cache.get_or_compute(cache_key, compute, now)[0]
 
     def format_for_llm(self, results: DataFrame, spans: DataFrame) -> dict:
         """Driver-side sink (reference context dict): cap media at 4,

@@ -60,7 +60,7 @@ from pyspark.sql import types as T
 
 from crawleria_spark.config import CrawlConfig
 from crawleria_spark.functions.urls import host_expr, url_canon_expr
-from crawleria_spark.operators.bloom import FILTER_EPOCH
+from crawleria_spark.operators.bloom import FILTER_EPOCH, anti_join_seen
 from crawleria_spark.operators.ordinal import bucketed_dense_ordinal, bucketed_limit_by
 from crawleria_spark.plans.catalog import Catalog
 from crawleria_spark.sources.fetch import SPAN_SCHEMA, fetch_stage
@@ -311,12 +311,12 @@ class CrawlEngine:
             df.unpersist()
 
     def _seen_filter_ops(self):
-        """(table, build_fn, anti_join_fn, compact_fn) for the catalog's
-        AMQ seen-filter kind — the north rule's "bloom/cuckoo-filter
-        URL-seen set". Both kinds share the delta-append architecture
-        (O(delta) row appended per round, executor-side merge at probe,
-        bounded driver collect) and the zero-false-negative anti-join
-        contract, so the round pipeline is kind-agnostic."""
+        """(table, build_fn, compact_fn) for the catalog's AMQ seen-filter
+        kind — the north rule's "bloom/cuckoo-filter URL-seen set". Both
+        kinds share the delta-append architecture (O(delta) row appended
+        per round, executor-side merge at probe, bounded driver collect)
+        and one probe path (bloom.anti_join_seen reads the kind off the
+        table's blob column), so the round pipeline is kind-agnostic."""
         cfg = self.config
         if self._effective_seen_kind() == "cuckoo":
             from crawleria_spark.operators import cuckoo as cf
@@ -328,7 +328,7 @@ class CrawlEngine:
                     capacity_per_bucket=cfg.bloom_capacity_per_partition,
                 )
 
-            return "seen_cuckoo", build, cf.anti_join_seen_cuckoo, cf.compact_cuckoo
+            return "seen_cuckoo", build, cf.compact_cuckoo
         from crawleria_spark.operators import bloom as bl
 
         def build(df: DataFrame) -> DataFrame:
@@ -339,7 +339,7 @@ class CrawlEngine:
                 fpp=cfg.bloom_fpp,
             )
 
-        return "seen_bloom", build, bl.anti_join_seen, bl.compact_blooms
+        return "seen_bloom", build, bl.compact_blooms
 
     def init(self, seeds: list[str]) -> None:
         """Round -1 commit: seed frontier + empty state tables.
@@ -423,7 +423,7 @@ class CrawlEngine:
         return df.filter(cond)
 
     def _read_filter_checked(self):
-        """(filter_table, anti_join_fn, filter_df | None) for this round's
+        """(filter_table, filter_df | None) for this round's
         dedup. Before probing, the catalog's ``amq_epoch`` is checked
         against the current hashing scheme (bloom.FILTER_EPOCH): blobs
         are raw bit/slot arrays with no version header, so probing an
@@ -432,9 +432,9 @@ class CrawlEngine:
         rows, undetectably. A stale (or missing, i.e. pre-epoch) stamp
         triggers a one-time distributed rebuild of the filter from the
         exact seen table, committed with the fresh stamp."""
-        filter_table, build_filter, anti_join, _ = self._seen_filter_ops()
+        filter_table, build_filter, _ = self._seen_filter_ops()
         if not (self.use_bloom and self._has_filter(filter_table)):
-            return filter_table, anti_join, None
+            return filter_table, None
         if self._latest_meta().get("amq_epoch") != FILTER_EPOCH:
             print(
                 f"[crawleria] {filter_table} was written under filter epoch "
@@ -451,7 +451,7 @@ class CrawlEngine:
                 },
                 meta=self._carry_meta(amq_epoch=FILTER_EPOCH),
             )
-        return filter_table, anti_join, self._read_state(filter_table)
+        return filter_table, self._read_state(filter_table)
 
     def _has_filter(self, filter_table: str) -> bool:
         """Whether the logical catalog state (durable manifest or the
@@ -511,7 +511,7 @@ class CrawlEngine:
             # 8-23 s per round on the 2M-URL bench; this is O(delta)
             # like every other append. crawl() compacts when
             # directories pile up.
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
+            filter_table, build_filter, _ = self._seen_filter_ops()
             filter_src = seen_new.select("url_hash")
             if not self._has_filter(filter_table):
                 # FIRST filter write of this catalog: it must cover the
@@ -558,7 +558,7 @@ class CrawlEngine:
 
         from crawleria_spark.operators.politeness import bucketed_host_rank, per_host_rank
 
-        filter_table, anti_join_seen, bloom_df = self._read_filter_checked()
+        filter_table, bloom_df = self._read_filter_checked()
         round_persists: list = []  # intermediates to release post-commit
         remaining = cfg.max_pages - fetched_total
         if remaining <= 0:
@@ -1029,38 +1029,88 @@ class CrawlEngine:
             "head_cutoff": cutoff,
         }
 
+    def _unsee(
+        self,
+        kept: DataFrame,
+        expired: DataFrame,
+        n_expired: int,
+        requeue: bool,
+        hashes: list[int] | None = None,
+    ) -> None:
+        """The one atomic un-see commit of forget() and refresh().
+
+        ``expired`` holds the seen rows to un-see (``url_canon``,
+        ``url_hash``) and ``__ord``, their dense 0-based requeue order;
+        ``kept`` is the surviving seen set. The commit replaces ``seen``
+        with ``kept``, updates the AMQ filter and stamps ``amq_epoch``,
+        and with ``requeue`` appends the expired URLs to the frontier as
+        depth-0 rows with fresh priorities in ``__ord`` order. Existing
+        documents/fetch_log rows stay; a re-fetch appends new rows.
+
+        The cuckoo kind DELETES ``hashes`` (O(filter bytes)) when the
+        caller passes them, the wave is at most FORGET_DELETE_MAX keys
+        and the filter is at the current epoch (stale blobs probe wrong,
+        so deleting would corrupt silently). Otherwise — and always for
+        blooms, which cannot delete — the filter is rebuilt from
+        ``kept`` in one distributed pass."""
+        meta = dict(self.catalog.latest_meta())
+        rnd = int(meta.get("round", -1))
+        replace: dict[str, DataFrame] = {"seen": kept}
+        if self.use_bloom:
+            filter_table, build_filter, _ = self._seen_filter_ops()
+            if self.catalog.exists(filter_table):
+                if (
+                    hashes is not None
+                    and filter_table == "seen_cuckoo"
+                    and n_expired <= self.FORGET_DELETE_MAX
+                    and meta.get("amq_epoch") == FILTER_EPOCH
+                ):
+                    from crawleria_spark.operators.cuckoo import delete_hashes
+
+                    replace[filter_table] = delete_hashes(
+                        self.catalog.read(filter_table),
+                        hashes,
+                        n_buckets=self.config.frontier_partitions,
+                    )
+                else:
+                    replace[filter_table] = build_filter(kept.select("url_hash"))
+                meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
+        append: dict[str, DataFrame] = {}
+        if requeue:
+            next_priority = int(meta["next_priority"])
+            append["frontier"] = expired.select(
+                F.col("url_canon").alias("url"),  # canon is fetchable
+                "url_canon",
+                "url_hash",
+                F.lower(host_expr("url_canon")).alias("host"),
+                F.lit(0).alias("depth"),
+                (F.col("__ord") + F.lit(next_priority)).cast("double").alias("priority"),
+                F.lit(rnd).alias("discovered_round"),
+                F.lit(0).alias("salt"),
+            )
+            meta["next_priority"] = next_priority + n_expired
+            if "frontier_gross" in meta:
+                meta["frontier_gross"] = int(meta["frontier_gross"]) + n_expired
+        self.catalog.commit(replace=replace, append=append or None, meta=meta)
+
     def forget(self, urls: list[str], requeue: bool = True) -> int:
         """Un-see URLs so future rounds re-fetch them (re-crawl/refresh
         scheduling). Returns how many of the URLs were actually seen.
 
-        Admin op, not a round: one atomic commit that (a) REPLACEs the
-        exact ``seen`` table minus the targets, (b) updates the AMQ
-        filter — this is where ``config.seen_filter`` matters: the
-        CUCKOO kind DELETES the targets' fingerprints in O(filter
-        bytes) (operators/cuckoo.delete_hashes), while the bloom kind
-        must REBUILD from the full remaining seen set because blooms
-        cannot delete — a forget-heavy deployment should therefore run
-        with ``seen_filter="cuckoo"``; under the default bloom every
-        forget relaunches an O(total-seen) distributed rebuild — and
-        (c) with ``requeue=True`` APPENDs the
-        forgotten URLs back onto the frontier as depth-0 rows with
-        fresh priorities (else they are only re-fetched if
-        re-discovered). Existing documents/fetch_log rows are kept —
-        a refresh appends new rows; consumers read the latest round.
+        Admin op, not a round: one ``_unsee`` commit. This is where
+        ``config.seen_filter`` matters: the CUCKOO kind deletes the
+        targets' fingerprints, while the bloom kind must rebuild from
+        the full remaining seen set — a forget-heavy deployment should
+        therefore run with ``seen_filter="cuckoo"``; under the default
+        bloom every forget relaunches an O(total-seen) distributed
+        rebuild. With ``requeue=True`` the forgotten URLs are re-enqueued
+        in caller order (else they are only re-fetched if re-discovered).
         The reference has no re-crawl support at all (its URL-seen
         ``Set`` import is dead code, src/crawler/crawler.py:8)."""
-        from urllib.parse import urlparse
-
         from crawleria_spark.functions.urls import canonicalize
 
         self.flush()
-        canon = []
-        seen_order: set[str] = set()
-        for u in urls:
-            c = canonicalize(u)
-            if c not in seen_order:  # dedupe, keep caller order
-                seen_order.add(c)
-                canon.append(c)
+        canon = list(dict.fromkeys(canonicalize(u) for u in urls))  # caller order
         if not canon:
             return 0
         targets = self.spark.createDataFrame(
@@ -1075,64 +1125,17 @@ class CrawlEngine:
         if not present_rows:
             return 0
         present = {r["url_canon"]: int(r["url_hash"]) for r in present_rows}
-        new_seen = seen.join(targets, "url_canon", "left_anti")
-        replace: dict[str, DataFrame] = {"seen": new_seen}
-        if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            if self.catalog.exists(filter_table):
-                if (
-                    self._effective_seen_kind() == "cuckoo"
-                    and len(present) <= self.FORGET_DELETE_MAX
-                    # stale-epoch blobs probe wrong — deletion would
-                    # corrupt silently; rebuild re-stamps instead
-                    and self.catalog.latest_meta().get("amq_epoch")
-                    == FILTER_EPOCH
-                ):
-                    from crawleria_spark.operators.cuckoo import delete_hashes
-
-                    replace[filter_table] = delete_hashes(
-                        self.catalog.read(filter_table),
-                        list(present.values()),
-                        n_buckets=self.config.frontier_partitions,
-                    )
-                else:
-                    # bloom kind (no deletion), or a forget wave too big
-                    # for delete_hashes's per-key driver loop
-                    # (> FORGET_DELETE_MAX keys): distributed rebuild
-                    # from the surviving seen rows, refresh()-style
-                    replace[filter_table] = build_filter(
-                        new_seen.select("url_hash")
-                    )
-        meta = dict(self.catalog.latest_meta())
-        if any(t in replace for t in ("seen_bloom", "seen_cuckoo")):
-            meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
-        append: dict[str, DataFrame] = {}
-        if requeue:
-            next_priority = int(meta["next_priority"])
-            rows = []
-            for c in canon:
-                if c not in present:
-                    continue
-                rows.append(
-                    (
-                        c,
-                        c,
-                        present[c],
-                        urlparse(c).netloc.lower(),
-                        0,
-                        float(next_priority),
-                        int(meta.get("round", -1)),
-                        0,
-                    )
-                )
-                next_priority += 1
-            meta["next_priority"] = next_priority
-            append["frontier"] = self.spark.createDataFrame(
-                rows, schema=FRONTIER_SCHEMA
-            )
-            if "frontier_gross" in meta:
-                meta["frontier_gross"] = int(meta["frontier_gross"]) + len(rows)
-        self.catalog.commit(replace=replace, append=append or None, meta=meta)
+        expired = self.spark.createDataFrame(
+            [(c, present[c], i) for i, c in enumerate(c for c in canon if c in present)],
+            "url_canon string, url_hash long, __ord long",
+        )
+        self._unsee(
+            seen.join(targets, "url_canon", "left_anti"),
+            expired,
+            len(present),
+            requeue,
+            hashes=list(present.values()),
+        )
         return len(present)
 
     def refresh(self, max_age_rounds: int, requeue: bool = True) -> dict:
@@ -1144,64 +1147,40 @@ class CrawlEngine:
         rules may have changed; a still-denied URL is simply re-denied
         (and re-seen) by its next round.
 
-        The BULK counterpart of forget(): everything stays distributed —
-        the expired set is never collected (at 10^10 URLs a refresh
-        wave can be most of the table). The AMQ filter is REBUILT from
-        the surviving seen rows in one distributed pass rather than
-        deleting expired fingerprints one by one: a wave deletes a
-        large fraction of all keys, where rebuild is O(survivors) and
-        yields a fresh compact filter (both kinds; cuckoo's O(filter)
-        delete remains the right tool for the bounded forget() path).
-        Re-enqueue priorities come from the recompute-safe bucketed
-        ordinal — no single-partition window, no sampling job. One
-        atomic commit; resumable like any round boundary."""
-        from crawleria_spark.functions.urls import host_expr
-        from crawleria_spark.operators.ordinal import bucketed_dense_ordinal
-
+        The BULK counterpart of forget(), through the same ``_unsee``
+        commit: everything stays distributed — the expired set is never
+        collected (at 10^10 URLs a refresh wave can be most of the
+        table). The AMQ filter is always REBUILT from the surviving seen
+        rows rather than deleting expired fingerprints one by one: a
+        wave deletes a large fraction of all keys, where rebuild is
+        O(survivors) and yields a fresh compact filter (both kinds;
+        cuckoo's O(filter) delete remains the right tool for the bounded
+        forget() path). Requeue order comes from the recompute-safe
+        bucketed ordinal — no single-partition window, no sampling job.
+        Resumable like any round boundary."""
         self.flush()
-        meta = dict(self.catalog.latest_meta())
-        rnd = int(meta.get("round", -1))
+        rnd = int(self.catalog.latest_meta().get("round", -1))
         cutoff = rnd - max_age_rounds
         seen = self.catalog.read("seen")
         expired = seen.filter(F.col("first_round") <= F.lit(cutoff))
-        kept = seen.filter(F.col("first_round") > F.lit(cutoff))
         n_expired = expired.count()
         if n_expired == 0:
             return {"round": rnd, "expired": 0, "requeued": 0}
-        replace: dict[str, DataFrame] = {"seen": kept}
-        if self.use_bloom:
-            filter_table, build_filter, _, _ = self._seen_filter_ops()
-            if self.catalog.exists(filter_table):
-                replace[filter_table] = build_filter(kept.select("url_hash"))
-                meta["amq_epoch"] = FILTER_EPOCH  # freshly written blobs
-        append: dict[str, DataFrame] = {}
-        n_requeued = 0
-        if requeue:
-            next_priority = int(meta["next_priority"])
-            ranked = bucketed_dense_ordinal(
-                expired,
-                "first_round",
-                ["first_round", "url_canon"],
-                bound=float(rnd + 1),
-                col_name="__ord",
-                start=next_priority,
-            )
-            append["frontier"] = ranked.select(
-                F.col("url_canon").alias("url"),  # canon is fetchable
-                "url_canon",
-                "url_hash",
-                F.lower(host_expr("url_canon")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.col("__ord").cast("double").alias("priority"),
-                F.lit(rnd).alias("discovered_round"),
-                F.lit(0).alias("salt"),
-            )
-            meta["next_priority"] = next_priority + n_expired
-            n_requeued = n_expired
-            if "frontier_gross" in meta:
-                meta["frontier_gross"] = int(meta["frontier_gross"]) + n_expired
-        self.catalog.commit(replace=replace, append=append or None, meta=meta)
-        return {"round": rnd, "expired": n_expired, "requeued": n_requeued}
+        ranked = bucketed_dense_ordinal(
+            expired,
+            "first_round",
+            ["first_round", "url_canon"],
+            bound=float(rnd + 1),
+            col_name="__ord",
+        )
+        self._unsee(
+            seen.filter(F.col("first_round") > F.lit(cutoff)), ranked, n_expired, requeue
+        )
+        return {
+            "round": rnd,
+            "expired": n_expired,
+            "requeued": n_expired if requeue else 0,
+        }
 
     def capture_single_page(self, url: str) -> dict:
         """Reference F10 (``capture_single_page``, src/crawler/crawler.py:
@@ -1300,6 +1279,32 @@ class CrawlEngine:
         """
         if seeds is not None:
             self.init(seeds)
+        filter_table, _, compact_filter = self._seen_filter_ops()
+        read = self.catalog.read
+        rewrites = {
+            "seen": lambda: read("seen"),
+            # host_seq compacts to the RUNNING PER-HOST TOTALS (one row
+            # per host), not a concatenation of the delta rows: rounds
+            # only ever consume sum(n_fetched) per host, so the next
+            # round's aggregate reads O(distinct hosts) compacted totals
+            # + O(recent rounds) un-compacted deltas instead of the full
+            # per-round delta history (r3 verdict: that input grew with
+            # crawl breadth × round count)
+            "host_seq": lambda: read("host_seq")
+            .groupBy("host")
+            .agg(F.sum("n_fetched").cast("long").alias("n_fetched")),
+            # the frontier compacts to its LIVE set (gross ∖ seen): the
+            # append-only re-enqueue leaves dequeued rows in place until
+            # this periodic rewrite reclaims them — one O(live) write
+            # every ~64 rounds instead of every round
+            "frontier": lambda: read("frontier").join(
+                read("seen").select("url_canon"), "url_canon", "left_anti"
+            ),
+        }
+        if self.use_bloom:
+            # the filter append-table also merges rows per bucket when
+            # compacted, so probe-time merge cost stays bounded too
+            rewrites[filter_table] = lambda: compact_filter(read(filter_table))
         stats = []
         for _ in range(max_rounds):
             meta = self._latest_meta()
@@ -1316,61 +1321,26 @@ class CrawlEngine:
             stats.append(st)
             if st["stopped"]:
                 break
-            # compaction thresholds read the durable manifest (may lag
-            # the in-flight round by one dir — harmless for a threshold);
-            # a compaction COMMIT barriers via flush() first
-            # bound file-listing growth of append tables on long crawls
-            if self._n_dirs_logical("seen") > self.config.compact_dirs_threshold:
+            # bound file-listing growth of append tables on long crawls:
+            # every table past the threshold is rewritten in ONE commit.
+            # Thresholds count the logical dirs, so pipelined and
+            # blocking crawls compact at the same rounds; the commit
+            # barriers via flush() first
+            due = [
+                t for t in rewrites
+                if self._n_dirs_logical(t) > self.config.compact_dirs_threshold
+            ]
+            if due:
                 self.flush()
-                self.catalog.compact("seen")
-            # host_seq compacts to the RUNNING PER-HOST TOTALS (one row
-            # per host), not a concatenation of the delta rows: rounds
-            # only ever consume sum(n_fetched) per host, so the next
-            # round's aggregate reads O(distinct hosts) compacted totals
-            # + O(recent rounds) un-compacted deltas instead of the full
-            # per-round delta history (r3 verdict: that input grew with
-            # crawl breadth × round count)
-            if self._n_dirs_logical("host_seq") > self.config.compact_dirs_threshold:
-                self.flush()
-                totals = (
-                    self.catalog.read("host_seq")
-                    .groupBy("host")
-                    .agg(F.sum("n_fetched").cast("long").alias("n_fetched"))
-                )
+                meta = dict(self.catalog.latest_meta())
+                if "frontier" in due:
+                    # the rewrite drops dead rows, so the carried gross
+                    # count is stale — drop the key; the next round
+                    # counts the freshly-compacted dirs once
+                    # (metadata-only) and re-stamps it
+                    meta.pop("frontier_gross", None)
                 self.catalog.commit(
-                    replace={"host_seq": totals}, meta=self.catalog.latest_meta()
-                )
-            # the frontier compacts to its LIVE set (gross ∖ seen): the
-            # append-only re-enqueue leaves dequeued rows in place until
-            # this periodic rewrite reclaims them — one O(live) write
-            # every ~64 rounds instead of every round
-            if self._n_dirs_logical("frontier") > self.config.compact_dirs_threshold:
-                self.flush()
-                alive_frontier = self.catalog.read("frontier").join(
-                    self.catalog.read("seen").select("url_canon"),
-                    "url_canon",
-                    "left_anti",
-                )
-                # the rewrite drops dead rows, so the carried gross
-                # count is stale — drop the key; the next round counts
-                # the freshly-compacted dirs once (metadata-only) and
-                # re-stamps it
-                compact_meta = dict(self.catalog.latest_meta())
-                compact_meta.pop("frontier_gross", None)
-                self.catalog.commit(
-                    replace={"frontier": alive_frontier},
-                    meta=compact_meta,
-                )
-            # the filter append-table also merges rows per bucket when
-            # compacted, so probe-time merge cost stays bounded too
-            filter_table, _, _, compact_filter = self._seen_filter_ops()
-            if self.use_bloom and self._n_dirs_logical(filter_table) > self.config.compact_dirs_threshold:
-                self.flush()
-                self.catalog.commit(
-                    replace={
-                        filter_table: compact_filter(self.catalog.read(filter_table))
-                    },
-                    meta=self.catalog.latest_meta(),
+                    replace={t: rewrites[t]() for t in due}, meta=meta
                 )
         # final barrier: callers observe a fully durable catalog — the
         # pipelined mode never changes what crawl() leaves on disk

@@ -12,7 +12,7 @@ from crawleria_spark.operators.bloom import (
     anti_join_seen,
     bloom_params,
     build_bloom,
-    merge_blooms,
+    compact_blooms,
 )
 
 
@@ -79,8 +79,10 @@ def test_merge_blooms_is_or(spark):
     b = spark.range(1000, 2000).withColumn("url_hash", F.xxhash64("id"))
     both = spark.range(0, 2000).withColumn("url_hash", F.xxhash64("id"))
     kw = dict(n_buckets=4, capacity_per_bucket=5_000)
-    merged = merge_blooms(
-        build_bloom(a.select("url_hash"), **kw), build_bloom(b.select("url_hash"), **kw)
+    merged = compact_blooms(
+        build_bloom(a.select("url_hash"), **kw).unionByName(
+            build_bloom(b.select("url_hash"), **kw)
+        )
     )
     direct = build_bloom(both.select("url_hash"), **kw)
     m = {r["partition"]: (bytes(r["bloom"]), r["n_items"]) for r in merged.collect()}

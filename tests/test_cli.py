@@ -4,6 +4,7 @@ crawl / process / query / pipeline subcommands."""
 import json
 
 from crawleria_spark.__main__ import build_parser, main
+from crawleria_spark.plans.snapshot import SnapshotCatalog
 
 
 def test_cli_global_opts_either_side_of_subcommand():
@@ -50,6 +51,12 @@ def test_cli_resume(spark, tmp_path, capsys):
           "--depth", "2", "--max-pages", "30", "--max-rounds", "3", "--resume"])
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert second["fetched"] > first["fetched"]
+    # pending counts the live frontier (frontier ▷ seen, distinct URLs),
+    # not the append-only table's physical rows
+    catalog = SnapshotCatalog(spark, cat)
+    canon = {t: {r["url_canon"] for r in catalog.read(t).collect()}
+             for t in ("frontier", "seen")}
+    assert second["pending"] == len(canon["frontier"] - canon["seen"])
 
 
 def test_cli_forget_recrawl(spark, tmp_path, capsys):
@@ -60,7 +67,7 @@ def test_cli_forget_recrawl(spark, tmp_path, capsys):
     main(["--catalog", cat, "crawl", seed, "--depth", "1",
           "--max-pages", "12", "--max-rounds", "5", "--seen-filter", "cuckoo"])
     first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    rc = main(["--catalog", cat, "forget", seed, "--seen-filter", "cuckoo"])
+    rc = main(["--catalog", cat, "forget", seed])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["forgotten"] == 1 and out["requeued"] == 1
@@ -75,8 +82,6 @@ def test_cli_seen_filter_kind_comes_from_catalog(spark, tmp_path, capsys):
     """Without --seen-filter, resume and forget use the kind the catalog
     was crawled with: no kind-mismatch warning, the filter stays a
     cuckoo table, and it keeps covering exactly the seen rows."""
-    from crawleria_spark.plans.snapshot import SnapshotCatalog
-
     cat = str(tmp_path / "cli_kind")
     seed = "https://hub.example.com/p/0"
     main(["--catalog", cat, "crawl", seed, "--depth", "1",

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from crawleria_spark.operators.bloom import anti_join_seen, bloom_split
 from crawleria_spark.operators.cuckoo import (
     SLOTS,
     _decompose,
@@ -17,11 +18,9 @@ from crawleria_spark.operators.cuckoo import (
     _insert_all,
     _merge_blobs,
     _probe,
-    anti_join_seen_cuckoo,
     build_cuckoo,
     compact_cuckoo,
     cuckoo_m_buckets,
-    cuckoo_split,
     delete_hashes,
 )
 
@@ -85,10 +84,10 @@ def test_anti_join_equivalence_cuckoo(spark):
     ).withColumn("url_hash", F.xxhash64("url_canon"))
 
     cf = build_cuckoo(seen.select("url_hash"), n_buckets=8, capacity_per_bucket=10_000)
-    exact = {r["url_canon"] for r in anti_join_seen_cuckoo(pending, seen).collect()}
+    exact = {r["url_canon"] for r in anti_join_seen(pending, seen).collect()}
     fast = {
         r["url_canon"]
-        for r in anti_join_seen_cuckoo(pending, seen, cf, n_buckets=8).collect()
+        for r in anti_join_seen(pending, seen, cf, n_buckets=8).collect()
     }
     assert fast == exact
     assert 0 < len(exact) < n_pending
@@ -119,7 +118,7 @@ def test_delta_rows_sparse_and_compact_single_row(spark):
 
     probe = spark.range(0, 22_000).withColumn("url_hash", F.xxhash64("id"))
     for table in (deltas, spark.createDataFrame(compacted)):
-        certain_new, _ = cuckoo_split(probe, table, n_buckets=4)
+        certain_new, _ = bloom_split(probe, table, n_buckets=4)
         new_ids = {r["id"] for r in certain_new.collect()}
         assert not any(i in new_ids for i in range(21_500))  # zero FN
         assert sum(1 for i in range(21_500, 22_000) if i in new_ids) > 450
@@ -133,7 +132,7 @@ def test_delete_hashes_unsees_keys(spark):
     ]
     cf2 = delete_hashes(cf, gone_hashes, n_buckets=4)
     probe = spark.range(0, 2_000).withColumn("url_hash", F.xxhash64("id"))
-    certain_new, _ = cuckoo_split(probe, cf2, n_buckets=4)
+    certain_new, _ = bloom_split(probe, cf2, n_buckets=4)
     new_ids = {r["id"] for r in certain_new.collect()}
     # kept keys still probe positive (zero FN)
     assert not any(i in new_ids for i in range(500, 2_000))

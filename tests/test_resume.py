@@ -358,6 +358,7 @@ def test_refresh_ttl_recrawl(spark, tmp_path):
     are un-seen and re-enqueued stalest-first; a resumed crawl re-fetches
     exactly them and the seen set converges back to the original."""
     import dataclasses
+    import shutil
 
     from pyspark.sql import functions as F
 
@@ -388,6 +389,10 @@ def test_refresh_ttl_recrawl(spark, tmp_path):
         "round": rnd, "expired": 0, "requeued": 0,
     }
     assert catalog.latest_version() == v
+    # a pre-refresh copy for the forget() comparison below: its manifests
+    # still point at this catalog's data dirs, which nothing removes
+    copy_root = str(tmp_path / "forget_copy")
+    shutil.copytree(root, copy_root, symlinks=True)
 
     # expire the round-0 wave only
     out = engine.refresh(max_age_rounds=rnd)
@@ -410,6 +415,26 @@ def test_refresh_ttl_recrawl(spark, tmp_path):
     assert [c for _, c, *_ in rq] == sorted(wave)
     assert all(d == 0 and h and h in c for _, c, h, d in rq)
     assert int(catalog.latest_meta()["next_priority"]) == next_priority + len(wave)
+
+    # forget() of the same wave in (first_round, url_canon) order goes
+    # through the same un-see commit: identical seen set, filter size,
+    # requeued rows and priority/frontier bookkeeping
+    copy = SnapshotCatalog(spark, copy_root)
+    forgetter = CrawlEngine(
+        spark, copy, cfg, synthetic_fetcher(WORLD),
+        robots_rows=robots_rules(WORLD), use_bloom=True,
+    )
+    assert forgetter.forget(sorted(wave)) == len(wave)
+    assert {r["url_canon"] for r in copy.read("seen").collect()} == seen_mid
+    assert copy.read("seen_bloom").agg(F.sum("n_items")).collect()[0][0] == n_items
+    assert rq == sorted(
+        (r["priority"], r["url_canon"], r["host"], r["depth"])
+        for r in copy.read("frontier")
+        .filter(F.col("priority") >= next_priority)
+        .collect()
+    )
+    for key in ("next_priority", "frontier_gross"):
+        assert copy.latest_meta()[key] == catalog.latest_meta()[key], key
 
     # a resumed crawl re-fetches exactly the expired wave
     engine.crawl(seeds=None, max_rounds=20)
