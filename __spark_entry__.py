@@ -458,12 +458,11 @@ def q_url_canonical_doc_id(spark, sf_dir):
 
 
 def q_host_extract(spark, sf_dir):
-    """P1: host extraction (JVM regexp — pushdown-friendly)."""
+    """P1: host extraction (``host_expr``, a JVM expression)."""
+    from crawleria_spark.functions.urls import host_expr
+
     docs = _t(spark, sf_dir, "documents", parallelize=True).withColumn("url", F.expr(_SEG_URL))
-    return docs.select(
-        F.col("doc_id").alias("in_id"),
-        F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"),
-    )
+    return docs.select(F.col("doc_id").alias("in_id"), host_expr("url").alias("host"))
 
 
 def q_exact_dup_groups(spark, sf_dir):

@@ -3,11 +3,9 @@ from crawleria_spark.functions.urls import (
     canonicalize,
     host_of,
     doc_id_expr,
-    doc_id_udf,
     host_expr,
+    path_expr,
     url_canon_expr,
-    url_canon_udf,
-    url_host_udf,
     url_hash_col,
 )
 
@@ -16,10 +14,8 @@ __all__ = [
     "canonicalize",
     "host_of",
     "doc_id_expr",
-    "doc_id_udf",
     "host_expr",
+    "path_expr",
     "url_canon_expr",
-    "url_canon_udf",
-    "url_host_udf",
     "url_hash_col",
 ]

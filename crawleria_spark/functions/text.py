@@ -8,16 +8,13 @@ oracle can verify it (see __spark_entry__.py oracle_sql).
 
 Definitions (engine-authoritative, mirrored in oracle SQL):
 - token_count: size(split(trim(text), '\\s+')) — whitespace tokens
-- word-ish tokens (BPE-ish pre-tokenization): regexp count of
-  [A-Za-z0-9]+('[a-z]+)? runs
 - punct_ratio: punctuation chars / total chars
 - stopword_ratio: tokens ∈ STOPWORDS / tokens
 - quality_score: 0.4·len_norm + 0.3·(1-punct_ratio) + 0.3·stopword_band
   (len_norm = least(n_tokens/100, 1); stopword_band = 1 when ratio in
   [0.1, 0.6] — natural prose — else 0)
 - fingerprint: md5 of whitespace-normalized lowercase text (md5 exists
-  on both engines, so oracle-checkable; xxhash64 variant for JVM-only
-  speed)
+  on both engines, so oracle-checkable)
 """
 
 from __future__ import annotations
@@ -32,7 +29,6 @@ STOPWORDS = (
     "with as at by from not no yes we you they he she i"
 ).split()
 
-_WORD_RE = r"[A-Za-z0-9]+(?:'[a-z]+)?"
 _PUNCT_RE = r"[!-/:-@\[-`{-~]"
 
 
@@ -43,11 +39,6 @@ def _c(col: Column | str) -> Column:
 def token_count(text: Column | str) -> Column:
     t = F.trim(_c(text))
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-
-
-def word_token_count(text: Column | str) -> Column:
-    """BPE-ish pre-tokenization count: alnum runs with optional 'suffix."""
-    return F.size(F.regexp_extract_all(_c(text), F.lit(_WORD_RE), 0))
 
 
 def punct_ratio(text: Column | str) -> Column:

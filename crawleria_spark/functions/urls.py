@@ -1,4 +1,4 @@
-"""URL column functions: canonical doc_id, canonical URL, host, hash.
+"""URL column functions: canonical doc_id, canonical URL, host, path, hash.
 
 Parity targets in the reference:
 - ``get_clean_filename`` (src/utils.py:38-60): domain + path with
@@ -11,24 +11,34 @@ Parity targets in the reference:
 The reference has no URL-seen set (a ``Set`` is imported at
 src/crawler/crawler.py:8 but never used); the engine defines a proper
 canonical URL for dedup (``canonicalize``): lowercase scheme+host, strip
-default port, drop fragment, collapse empty path to '/', strip trailing
-slash on non-root paths, keep the query string.
+default port, drop fragment and ``;params``, collapse empty path to '/',
+strip trailing slash on non-root paths, keep the query string.
 
-All Spark-facing entry points are vectorized pandas UDFs (Arrow batches,
-no row-at-a-time Python UDFs). Parsing is a single vectorized
-``str.extract`` with the RFC 3986 appendix-B regex, which agrees with
-``urllib.parse.urlparse`` on absolute URLs; the md5 fallback only runs on
-the (rare) >100-char subset.
+This module is the package's only URL parser, with one implementation per
+side, changed together (tests/test_urls.py pins them to each other):
+
+- scalar twins (``host_of``, ``canonicalize``, ``clean_filename``) on
+  ``urllib.parse.urlparse`` — driver-side code (seeds, forget, capture)
+  and the reference the JVM side is tested against;
+- JVM Column expressions (``host_expr``, ``path_expr``,
+  ``url_canon_expr``, ``doc_id_expr``, ``url_hash_col``) for Spark —
+  whole-stage codegen, no Python crossing.
+
+The JVM side splits with the RFC 3986 appendix-B regex, which agrees with
+``urlsplit`` on absolute URLs, then drops the last segment's ``;params``
+for the schemes in ``urllib.parse.uses_params``, as ``urlparse`` does
+(``path_expr``). urlsplit's removal of tab/newline characters and of
+leading whitespace is not mirrored: fetchers hand the engine links built
+by ``urljoin``, which has already removed them.
 """
 
 from __future__ import annotations
 
 import hashlib
+from urllib.parse import urlparse, uses_params
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # RFC 3986 appendix B: scheme, authority, path, query, fragment
 _URL_RE = (
@@ -39,21 +49,16 @@ _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
 
 
 # ---------------------------------------------------------------------------
-# scalar spec functions (used by docs/tests; the vectorized forms below are
-# what runs inside Spark)
+# scalar twins (driver side, and the reference for the JVM expressions)
 # ---------------------------------------------------------------------------
 
 def host_of(url: str) -> str:
     """Scalar twin of ``get_domain_from_url`` (reference src/utils.py:26-36)."""
-    from urllib.parse import urlparse
-
     return urlparse(url).netloc
 
 
 def clean_filename(url: str) -> str:
     """Scalar twin of ``get_clean_filename`` (reference src/utils.py:38-60)."""
-    from urllib.parse import urlparse
-
     parsed = urlparse(url)
     domain = parsed.netloc
     clean_path = parsed.path.replace("/", "_").strip("_")
@@ -67,8 +72,6 @@ def clean_filename(url: str) -> str:
 
 def canonicalize(url: str) -> str:
     """Scalar twin of the engine's canonical-URL form (seen-set key)."""
-    from urllib.parse import urlparse
-
     p = urlparse(url)
     scheme = p.scheme.lower()
     netloc = p.netloc.lower()
@@ -85,99 +88,43 @@ def canonicalize(url: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# vectorized (pandas Series in / out) implementations
+# JVM expressions (Spark side)
 # ---------------------------------------------------------------------------
 
-def _parse_parts(urls: pd.Series) -> pd.DataFrame:
-    parts = urls.fillna("").str.extract(_URL_RE)
-    parts.columns = ["scheme", "netloc", "path", "query", "fragment"]
-    return parts
-
-
-def clean_filename_series(urls: pd.Series) -> pd.Series:
-    parts = _parse_parts(urls)
-    domain = parts["netloc"].fillna("")
-    clean_path = parts["path"].fillna("").str.replace("/", "_", regex=False).str.strip("_")
-    clean_path = clean_path.where(clean_path != "", "home")
-    name = domain + "_" + clean_path
-    too_long = name.str.len() > 100
-    if too_long.any():
-        hashed = clean_path[too_long].map(
-            lambda p: hashlib.md5(p.encode()).hexdigest()[:10]
-        )
-        name = name.where(~too_long, domain[too_long] + "_" + hashed)
-    return name
-
-
-def canonicalize_series(urls: pd.Series) -> pd.Series:
-    parts = _parse_parts(urls)
-    scheme = parts["scheme"].fillna("").str.lower()
-    netloc = parts["netloc"].fillna("").str.lower()
-    for sch, suffix in _DEFAULT_PORTS.items():
-        mask = (scheme == sch) & netloc.str.endswith(suffix)
-        if mask.any():
-            netloc = netloc.where(~mask, netloc.str[: -len(suffix)])
-    path = parts["path"].fillna("")
-    path = path.where(path != "", "/")
-    trailing = (path.str.len() > 1) & path.str.endswith("/")
-    if trailing.any():
-        stripped = path[trailing].str.rstrip("/")
-        stripped = stripped.where(stripped != "", "/")
-        path = path.where(~trailing, stripped)
-    out = scheme + "://" + netloc + path
-    query = parts["query"]
-    has_q = query.notna() & (query != "")
-    if has_q.any():
-        out = out.where(~has_q, out + "?" + query.fillna(""))
-    return out
-
-
-def host_series(urls: pd.Series) -> pd.Series:
-    return _parse_parts(urls)["netloc"].fillna("")
-
-
-# ---------------------------------------------------------------------------
-# Spark pandas UDFs + JVM-side expressions
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def doc_id_udf(urls: pd.Series) -> pd.Series:
-    return clean_filename_series(urls)
-
-
-@F.pandas_udf(T.StringType())
-def url_canon_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_series(urls)
-
-
-@F.pandas_udf(T.StringType())
-def url_host_udf(urls: pd.Series) -> pd.Series:
-    return host_series(urls)
+def _col(url: Column | str) -> Column:
+    return F.col(url) if isinstance(url, str) else url
 
 
 def _group(url: Column, idx: int) -> Column:
     """RFC 3986 appendix-B group extraction, JVM-side. A group that does
-    not participate extracts as '' — same as the pandas fillna('')."""
+    not participate extracts as '' — what urlparse returns for it."""
     return F.regexp_extract(url, _URL_RE, idx)
 
 
 def host_expr(url: Column | str) -> Column:
-    """JVM twin of host_series: the raw authority (netloc) component."""
-    col = F.col(url) if isinstance(url, str) else url
-    return _group(col, 2)
+    """JVM twin of ``host_of``: the raw authority (netloc) component."""
+    return _group(_col(url), 2)
+
+
+def path_expr(url: Column | str) -> Column:
+    """JVM twin of ``urlparse(url).path``. For the schemes in
+    ``uses_params`` urlparse splits ``;params`` off at the first ';'
+    after the last '/' — ``;[^/]*$`` matches exactly that suffix."""
+    col = _col(url)
+    path = _group(col, 3)
+    return F.when(
+        F.lower(_group(col, 1)).isin(*uses_params),
+        F.regexp_replace(path, ";[^/]*$", ""),
+    ).otherwise(path)
 
 
 def doc_id_expr(url: Column | str) -> Column:
-    """JVM twin of clean_filename_series (reference get_clean_filename,
-    src/utils.py:38-60) — byte-parity pinned in tests/test_urls.py.
-
-    Whole-stage-codegen'd regexp/concat/md5: the canonical doc_id no
-    longer needs a Python crossing (it was the largest Arrow-UDF wall in
-    the headline bench)."""
-    col = F.col(url) if isinstance(url, str) else url
-    domain = _group(col, 2)
+    """JVM twin of ``clean_filename`` (reference get_clean_filename,
+    src/utils.py:38-60) — byte-parity pinned in tests/test_urls.py."""
+    col = _col(url)
+    domain = host_expr(col)
     clean_path = F.regexp_replace(
-        F.regexp_replace(_group(col, 3), "/", "_"), "^_+|_+$", ""
+        F.regexp_replace(path_expr(col), "/", "_"), "^_+|_+$", ""
     )
     clean_path = F.when(clean_path == "", "home").otherwise(clean_path)
     name = F.concat(domain, F.lit("_"), clean_path)
@@ -186,14 +133,13 @@ def doc_id_expr(url: Column | str) -> Column:
 
 
 def url_canon_expr(url: Column | str) -> Column:
-    """JVM twin of canonicalize_series (the seen-set key): lowercase
+    """JVM twin of ``canonicalize`` (the seen-set key): lowercase
     scheme+host, strip default port, path '' → '/', strip trailing
-    slashes on non-root paths, keep query, drop fragment. Runs on every
-    discovered link each round — keeping it inside codegen instead of an
-    Arrow UDF removes the crawl loop's biggest Python crossing."""
-    col = F.col(url) if isinstance(url, str) else url
+    slashes on non-root paths, keep query, drop fragment and params.
+    Runs on every discovered link each round."""
+    col = _col(url)
     scheme = F.lower(_group(col, 1))
-    netloc = F.lower(_group(col, 2))
+    netloc = F.lower(host_expr(col))
     netloc = (
         F.when(
             (scheme == "http") & netloc.endswith(":80"),
@@ -205,7 +151,7 @@ def url_canon_expr(url: Column | str) -> Column:
         )
         .otherwise(netloc)
     )
-    path = _group(col, 3)
+    path = path_expr(col)
     path = F.when(path == "", "/").otherwise(path)
     stripped = F.regexp_replace(path, "/+$", "")
     stripped = F.when(stripped == "", "/").otherwise(stripped)
@@ -222,5 +168,4 @@ def url_hash_col(url_canon: Column | str) -> Column:
     The exact dedup join is on ``url_canon`` itself, so the hash only
     feeds the bloom fast path and partitioning; collisions are harmless.
     """
-    col = F.col(url_canon) if isinstance(url_canon, str) else url_canon
-    return F.xxhash64(col)
+    return F.xxhash64(_col(url_canon))

@@ -1,17 +1,13 @@
 from crawleria_spark.multimodal.media import (
     MEDIA_META_SCHEMA,
     decode_media,
-    encode_for_llm,
     extract_features,
-    frame_sample,
     resize_images,
 )
 
 __all__ = [
     "MEDIA_META_SCHEMA",
     "decode_media",
-    "encode_for_llm",
     "extract_features",
-    "frame_sample",
     "resize_images",
 ]

@@ -4,7 +4,7 @@ The reference's media path is PIL open → downscale to max width 1920 →
 ship to the external indexer (src/document_processor/processor.py:59-64,
 config/config.py:47). Re-expressed for Spark: media travels as a
 ``binary`` column with a typed metadata struct; decode / resize /
-feature-extract / frame-sample run as Arrow-batched ``mapInPandas``
+feature-extract run as Arrow-batched ``mapInPandas``
 stages over partition-local batches.
 
 Codec layering (container has no PIL/ffmpeg): ``decode_media`` tries
@@ -210,33 +210,6 @@ def resize_images(
             yield out
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def frame_sample(
-    df: DataFrame, every_s: float = 1.0, max_frames: int = 16
-) -> DataFrame:
-    """Video → one row per sampled frame timestamp (real plumbing: the
-    explode/fan-out shape a real frame extractor would produce)."""
-    frames = F.transform(
-        F.sequence(
-            F.lit(0),
-            F.least(
-                F.floor(F.coalesce(F.col("meta.duration_s"), F.lit(0.0)) / every_s),
-                F.lit(max_frames - 1),
-            ).cast("int"),
-        ),
-        lambda i: i.cast("double") * every_s,
-    )
-    return (
-        df.filter(F.col("meta.media_type") == "video")
-        .withColumn("frame_ts", F.explode(frames))
-    )
-
-
-def encode_for_llm(df: DataFrame, bytes_col: str = "content", cap: int = 4) -> DataFrame:
-    """Reference P5+A9 (generator.py:60-76,101-102): base64-encode media
-    payloads for LLM shipping, at most `cap` rows. Pure JVM `base64`."""
-    return df.limit(cap).withColumn("b64", F.base64(F.col(bytes_col)))
 
 
 def extract_features(

@@ -1,8 +1,7 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families, each chosen for a different scale/recall trade-off:
+Each family is chosen for a different scale/recall trade-off:
 
-- exact_dedup: hash-groupBy on a fingerprint — one shuffle, exact.
 - minhash_lsh: shingle → minhash signature → band buckets → bucket
   self-join → exact-Jaccard verify. The self-join is on (band, bucket),
   so only near-duplicates collide; at 100 TB this is the standard
@@ -12,8 +11,8 @@ Five families, each chosen for a different scale/recall trade-off:
   then exact Hamming verify.
 - ngram_jaccard: exact verification primitive (used by the LSH verify
   stage; standalone only for bounded candidate sets).
-- embedding near-dup: cosine ≥ t pairs via random-hyperplane LSH buckets
-  (scale path) or brute force (small dims × small n; oracle-checkable).
+- embedding near-dup: cosine ≥ t pairs by brute force (small dims ×
+  small n; oracle-checkable).
 
 Signature math is fully vectorized: token hashing is one cython
 `pd.util.hash_array` call per Arrow batch, shingles are uint64
@@ -33,15 +32,11 @@ for a hard O(B) bound.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from crawleria_spark.functions.text import fingerprint_md5
 
 # 64-bit odd multipliers for shingle polynomial combine / splitmix64 mix.
 _FNV_PRIME = 0x100000001B3
@@ -50,38 +45,6 @@ _MIX_C2 = 0x94D049BB133111EB
 
 # Buckets beyond this size emit star pairs instead of all-pairs.
 DEFAULT_MAX_BUCKET = 64
-
-
-# ---------------------------------------------------------------------------
-# exact
-# ---------------------------------------------------------------------------
-
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep one row (min id) per normalized-text fingerprint."""
-    fp = df.withColumn("__fp", fingerprint_md5(text_col))
-    w = Window.partitionBy("__fp").orderBy(id_col)
-    return (
-        fp.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__fp", "__rn")
-    )
-
-
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(fingerprint, n_dups, doc_ids) for groups with >1 member."""
-    return (
-        df.withColumn("fingerprint", fingerprint_md5(text_col))
-        .groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -449,82 +412,12 @@ def embedding_dup_pairs_brute(
     threshold: float = 0.95,
 ) -> DataFrame:
     """All pairs with cosine >= threshold — O(n²) cross join; the exact
-    baseline for small n and the verify stage for the LSH variant."""
+    baseline for small n."""
     l = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     r = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         l.join(r, F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_dup_pairs_lsh(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_planes: int = 16,
-    n_tables: int = 4,
-    dim: int | None = None,
-    seed: int = 42,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Scale path: random-hyperplane LSH buckets (n_tables independent
-    sign-signatures) → bucket self-join on IDs ONLY → exact cosine
-    verify. Recall is probabilistic per table and boosted by table
-    count; precision is exact (verify stage).
-
-    The candidate join and its distinct carry only (id, bucket) — the
-    full vectors are re-joined AFTER dedup of the pair list, so the
-    bucket shuffle moves 16 bytes/row instead of the whole embedding.
-    Oversized bucket guard as in the minhash path.
-
-    r6: the hyperplanes are generated executor-side, once per task,
-    from (seed, dim) — dim inferred from the first Arrow batch when not
-    passed (identical planes everywhere: same seed, same generator).
-    Bucket parity across executors therefore assumes every executor's
-    numpy yields the same ``default_rng(seed)`` bitstream: executors
-    with different numpy builds could bucket the same vector
-    differently, silently lowering recall with no error. Fine for one
-    environment; a heterogeneous cluster would need planes derived from
-    a version-independent hash of the seed (e.g. SplitMix64).
-    The previous driver-side ``df.select(vec_col).first()`` was an
-    eager Spark action during plan CONSTRUCTION (the defect class the
-    r5 footer-stats work removed from q_pack_sequences); building the
-    plan now launches no job and ships no broadcast.
-    """
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def bucket_ids(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        planes = None
-        weights = 1 << np.arange(n_planes, dtype=np.int64)
-        for vecs in it:
-            mat = np.stack(vecs.to_numpy())  # (n, dim)
-            if planes is None:  # once per task (iterator form)
-                d = dim if dim is not None else mat.shape[1]
-                planes = np.random.default_rng(seed).standard_normal(
-                    (n_tables, n_planes, d)
-                ).astype(np.float32)
-                table_base = (
-                    np.arange(n_tables, dtype=np.int64) << n_planes
-                )[None, :]
-            signs = np.einsum("nd,tpd->ntp", mat, planes) > 0
-            codes = (signs * weights[None, None, :]).sum(axis=2)  # (n, tables)
-            yield pd.Series(list(codes + table_base))
-
-    bucketed = df.select(
-        F.col(id_col), F.explode(bucket_ids(F.col(vec_col))).alias("bucket")
-    )
-    cand = _capped_self_join_pairs(bucketed, ["bucket"], id_col, max_bucket_size)
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    enriched = (
-        cand.join(vecs.withColumnsRenamed({id_col: "id_a", vec_col: "va"}), "id_a")
-        .join(vecs.withColumnsRenamed({id_col: "id_b", vec_col: "vb"}), "id_b")
-    )
-    return (
-        enriched.withColumn("cosine", cosine_expr(F.col("va"), F.col("vb")))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -713,17 +606,3 @@ def connected_components(
             prev_sum = cur_sum
     return labels.select(F.col("id"), F.col("label").alias("group_id"))
 
-
-def near_dup_groups(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    iters: int = 8,
-    **minhash_kwargs,
-) -> DataFrame:
-    """MinHash-LSH pairs -> connected components: (doc_id, group_id)
-    for every document that has at least one near-duplicate. Keep
-    ``filter(doc_id == group_id)`` (one canonical doc per cluster) and
-    anti-join the rest away for cluster-level dedup."""
-    pairs = minhash_lsh_dedup_pairs(docs, id_col=id_col, text_col=text_col, **minhash_kwargs)
-    return connected_components(pairs, iters=iters).withColumnRenamed("id", id_col)

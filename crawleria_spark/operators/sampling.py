@@ -1,4 +1,4 @@
-"""Deterministic hash sampling and train/eval splitting.
+"""Deterministic hash sampling.
 
 Training-data pipelines need samples that are (a) reproducible without
 storing row lists, (b) stable under re-runs and data re-partitioning,
@@ -50,7 +50,7 @@ def sample_predicate(key: Column | str, frac: float, salt: str = "") -> Column:
     threshold = format(units, f"0{HEX_DIGITS}x")
     # coalesce: md5(NULL key) is NULL -> pred NULL -> the row would vanish
     # from BOTH filter(pred) and filter(~pred). Null keys deterministically
-    # land outside the sample (train side of split_train_eval).
+    # land outside the sample.
     return F.coalesce(_bucket_hex(key, salt) < F.lit(threshold), F.lit(False))
 
 
@@ -60,14 +60,3 @@ def deterministic_sample(
     """Reproducible ~``frac`` Bernoulli sample keyed on ``key_col``."""
     return df.filter(sample_predicate(key_col, frac, salt))
 
-
-def split_train_eval(
-    df: DataFrame, eval_frac: float, key_col: str, salt: str = ""
-) -> tuple[DataFrame, DataFrame]:
-    """(train, eval) split on the same hash coordinate: disjoint,
-    exhaustive, reproducible — the standard held-out-set primitive
-    (pair with ``operators.dedup.decontaminate`` to keep eval n-grams
-    out of train). NULL keys land in train (the predicate coalesces
-    NULL to False), keeping the split exhaustive."""
-    pred = sample_predicate(key_col, eval_frac, salt)
-    return df.filter(~pred), df.filter(pred)

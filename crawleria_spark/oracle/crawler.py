@@ -64,7 +64,8 @@ _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
 
 def _canon(url: str) -> str:
     # Independent scalar implementation of the engine canonical-URL spec
-    # (see crawleria_spark/functions/urls.py docstring) for two-impl parity.
+    # (see crawleria_spark/functions/urls.py docstring), kept separate from
+    # urls.canonicalize by design so oracle parity checks the engine's.
     p = urlparse(url)
     scheme = p.scheme.lower()
     netloc = p.netloc.lower()

@@ -59,7 +59,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crawleria_spark.config import CrawlConfig
-from crawleria_spark.functions.urls import host_expr, url_canon_expr
+from crawleria_spark.functions.urls import (
+    canonicalize,
+    host_expr,
+    host_of,
+    path_expr,
+    url_canon_expr,
+    url_hash_col,
+)
 from crawleria_spark.operators.bloom import FILTER_EPOCH, anti_join_seen
 from crawleria_spark.operators.ordinal import bucketed_dense_ordinal, bucketed_limit_by
 from crawleria_spark.plans.catalog import Catalog
@@ -351,12 +358,8 @@ class CrawlEngine:
         self.flush()
         cfg = self.config
         rows, next_priority = [], 0
-        from urllib.parse import urlparse
-
-        from crawleria_spark.functions.urls import canonicalize
-
         for url in seeds:
-            host = urlparse(url).netloc.lower()
+            host = host_of(url).lower()
             if not cfg.allowed(host):
                 continue
             rows.append((url, canonicalize(url), host, 0, float(next_priority), -1, 0))
@@ -365,7 +368,7 @@ class CrawlEngine:
             rows,
             schema="url string, url_canon string, host string, depth int, "
             "priority double, discovered_round int, salt int",
-        ).withColumn("url_hash", F.xxhash64("url_canon")).select(
+        ).withColumn("url_hash", url_hash_col("url_canon")).select(
             [f.name for f in FRONTIER_SCHEMA.fields]
         )
         # seen/host_seq etc. are APPEND tables during rounds (deltas per
@@ -600,9 +603,7 @@ class CrawlEngine:
             )
 
             # 3. robots gate: broadcast longest-prefix match per url
-            path = F.regexp_extract(
-                "url_canon", r"^[a-z][a-z0-9+.\-]*://[^/?#]*(/[^?#]*)", 1
-            )
+            path = path_expr("url_canon")
             best = best.withColumn("__path", F.when(path == "", "/").otherwise(path))
             if cfg.respect_robots_txt and self.robots is not None:
                 robots = F.broadcast(self.robots) if self._robots_small else self.robots
@@ -886,7 +887,7 @@ class CrawlEngine:
             new_rows = cand.select(
                 "url",
                 "url_canon",
-                F.xxhash64("url_canon").alias("url_hash"),
+                url_hash_col("url_canon").alias("url_hash"),
                 "host",
                 "depth",
                 F.col("__ord").cast("double").alias("priority"),
@@ -1107,8 +1108,6 @@ class CrawlEngine:
         in caller order (else they are only re-fetched if re-discovered).
         The reference has no re-crawl support at all (its URL-seen
         ``Set`` import is dead code, src/crawler/crawler.py:8)."""
-        from crawleria_spark.functions.urls import canonicalize
-
         self.flush()
         canon = list(dict.fromkeys(canonicalize(u) for u in urls))  # caller order
         if not canon:
@@ -1198,9 +1197,6 @@ class CrawlEngine:
         (``fetched_total`` unchanged); it does consume one priority
         ordinal so priorities stay globally unique.
         """
-        from urllib.parse import urlparse
-
-        from crawleria_spark.functions.urls import canonicalize
         from crawleria_spark.sources.fetch import with_spans_column
 
         self.flush()
@@ -1211,7 +1207,7 @@ class CrawlEngine:
         rnd = int(meta["round"]) + 1
         next_priority = int(meta["next_priority"])
         canon = canonicalize(url)
-        host = urlparse(url).netloc.lower()
+        host = host_of(url).lower()
         prior = 0
         if self.catalog.exists("host_seq"):
             agg = (
@@ -1226,7 +1222,7 @@ class CrawlEngine:
             schema="url string, url_canon string, host string, depth int, "
             "priority double, discovered_round int, salt int, "
             "politeness_slot int, seq_in_host int",
-        ).withColumn("url_hash", F.xxhash64("url_canon"))
+        ).withColumn("url_hash", url_hash_col("url_canon"))
         fetched = with_spans_column(
             fetch_stage(
                 one,

@@ -13,9 +13,13 @@ deterministic synthetic world in tests/bench, a real HTTP client in
 production. ``deterministic=True`` skips retries (a deterministic error
 fails identically every attempt).
 
+The UDF is the stage's one Python crossing: it only fetches. ``doc_id``
+(reference ``get_clean_filename``) is ``doc_id_expr``, a JVM column over
+the UDF's output.
+
 Output schema appends to the input columns:
 
-    status string, error string,
+    doc_id string, status string, error string,
     spans  array<struct<kind string, text string, media_ref string, offset int>>,
     links  array<string>
 """
@@ -29,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from crawleria_spark.functions.urls import doc_id_expr
 
 SPAN_SCHEMA = T.ArrayType(
     T.StructType(
@@ -46,9 +52,8 @@ SPAN_SCHEMA = T.ArrayType(
 # from per-span Python dicts (measured: the dict path dominated the crawl
 # round). with_spans_column() zips them back into the input_hint shape
 # JVM-side (arrays_zip is codegen'd; the cast renames fields positionally).
+# These are the UDF's fields; fetch_stage puts the JVM doc_id before them.
 FETCH_RESULT_FIELDS = [
-    T.StructField("doc_id", T.StringType()),  # clean_filename(url) — computed
-    # here so the crawl needs ONE Python pass, not a second UDF at write time
     T.StructField("status", T.StringType()),
     T.StructField("error", T.StringType()),
     T.StructField("span_kinds", T.ArrayType(T.StringType())),
@@ -143,10 +148,7 @@ def fetch_stage(
                 refs_col.append([s["media_ref"] for s in spans])
                 offs_col.append([s["offset"] for s in spans])
                 links_col.append(payload.get("links") or [])
-            from crawleria_spark.functions.urls import clean_filename_series
-
             out = pdf.copy()
-            out["doc_id"] = clean_filename_series(pdf[url_col])
             out["status"] = pd.Series(statuses, dtype="object")
             out["error"] = pd.Series(errors, dtype="object")
             out["span_kinds"] = pd.Series(kinds_col, dtype="object")
@@ -156,4 +158,8 @@ def fetch_stage(
             out["links"] = pd.Series(links_col, dtype="object")
             yield out
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInPandas(run, schema=out_schema).select(
+        *df.columns,
+        doc_id_expr(url_col).alias("doc_id"),
+        *(f.name for f in FETCH_RESULT_FIELDS),
+    )

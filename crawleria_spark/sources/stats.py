@@ -33,13 +33,6 @@ def _parquet_files(path: str) -> list[str]:
     return files
 
 
-def parquet_num_rows(path: str) -> int:
-    """Total row count from file footers (never scans data pages)."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
-
-
 def parquet_column_max(path: str, col: str) -> int | float | None:
     """Max of ``col`` across all row groups of all files, from footer
     statistics. Returns None when the table is empty or no row group

@@ -133,13 +133,24 @@ def test_delta_sized_blooms_bounded_probe(spark):
 
 
 def test_engine_parity_with_bloom(spark, tmp_catalog_root):
-    """Full oracle parity with use_bloom=True (identical seen set is the
-    north-rule invariant; the bloom must not change ANY output)."""
+    """Full oracle parity with use_bloom=True and skew_safe=True — the
+    flags the CLI and the benchmark crawl with (identical seen set is the
+    north-rule invariant; the bloom must not change ANY output) — under
+    an ``allowed_domains`` list: the hub host passes by suffix match, h1
+    and h2 by exact match; the h3 seed drops at init and links to h3-h7
+    in the engine's domain filter."""
+    import dataclasses
+
     from tests.test_oracle_parity import CONFIG, SEEDS, WORLD, assert_parity, run_engine
     from crawleria_spark.oracle.crawler import OracleCrawler
 
-    oracle = OracleCrawler(CONFIG, WORLD).crawl(SEEDS)
-    catalog = run_engine(spark, tmp_catalog_root, use_bloom=True)
+    config = dataclasses.replace(
+        CONFIG, allowed_domains=("example.com", "h1.example.org", "h2.example.org")
+    )
+    oracle = OracleCrawler(config, WORLD).crawl(SEEDS)
+    catalog = run_engine(
+        spark, tmp_catalog_root, config=config, use_bloom=True, skew_safe=True
+    )
     assert_parity(catalog, oracle)
     # the bloom table exists and covers the seen set
     assert catalog.exists("seen_bloom")

@@ -12,9 +12,6 @@ from crawleria_spark.operators.ann import (
 )
 from crawleria_spark.operators.dedup import (
     embedding_dup_pairs_brute,
-    embedding_dup_pairs_lsh,
-    exact_dedup,
-    exact_dup_groups,
     minhash_lsh_dedup_pairs,
     ngram_jaccard,
     simhash_dedup_pairs,
@@ -38,13 +35,6 @@ def docs(spark):
         rows.append((f"d{i}_near", " ".join(toks)))  # one-token mutation
     rows.append(("unique_1", "entirely unrelated text with zero overlap whatsoever"))
     return spark.createDataFrame(rows, "doc_id string, text string").persist()
-
-
-def test_exact_dedup(spark, docs):
-    assert exact_dedup(docs).count() == docs.count() - 4  # 4 exact dups removed
-    groups = exact_dup_groups(docs).collect()
-    assert len(groups) == 4
-    assert all(r["n_dups"] == 2 for r in groups)
 
 
 def test_minhash_near_dups(spark, docs):
@@ -219,14 +209,6 @@ def test_embedding_dups_brute_vs_lsh(spark, vectors):
         (r["id_a"], r["id_b"]) for r in embedding_dup_pairs_brute(vectors, threshold=0.99).collect()
     }
     assert brute == {(i, 100 + i) for i in range(5)}
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs_lsh(
-            vectors, threshold=0.99, n_planes=6, n_tables=8, dim=16
-        ).collect()
-    }
-    assert lsh <= brute  # exact verify ⇒ no false positives
-    assert len(lsh) >= 4  # high recall with 8 tables
 
 
 def test_cosine_topk_variants_agree(spark, vectors):
@@ -326,13 +308,9 @@ def test_decontaminate(spark):
 
 
 def test_deterministic_sampling_and_split(spark):
-    """Sampling is reproducible, salt-independent draws differ, the
-    split is disjoint+exhaustive on the same coordinate, and the
+    """Sampling is reproducible, salt-independent draws differ, and the
     realized fraction lands near the target."""
-    from crawleria_spark.operators.sampling import (
-        deterministic_sample,
-        split_train_eval,
-    )
+    from crawleria_spark.operators.sampling import deterministic_sample
 
     df = spark.range(4000).withColumnRenamed("id", "k")
     s1 = sorted(r["k"] for r in deterministic_sample(df, 0.2, "k", "a").collect())
@@ -342,10 +320,6 @@ def test_deterministic_sampling_and_split(spark):
     assert s1 != s3  # independent draw under a different salt
     assert 0.15 < len(s1) / 4000 < 0.25  # binomial around the target
 
-    train, ev = split_train_eval(df, 0.3, "k", "a")
-    tr = {r["k"] for r in train.collect()}
-    evs = {r["k"] for r in ev.collect()}
-    assert tr.isdisjoint(evs) and len(tr) + len(evs) == 4000
     # nesting: a smaller fraction with the same salt is a subset (hash
     # coordinate is shared), the property that makes corpus downsampling
     # monotone across runs
@@ -417,9 +391,8 @@ def test_ann_index_probes_equal_scan_probes(spark, vectors, tmp_path):
 
 def test_connected_components_exact(spark):
     """hash-min label propagation equals true components on a graph
-    with a chain (diameter stress), a triangle, and a singleton edge;
-    and near_dup_groups clusters transitively (a~b, b~c => one group)."""
-    from crawleria_spark.operators.dedup import connected_components, near_dup_groups
+    with a chain (diameter stress), a triangle, and a singleton edge."""
+    from crawleria_spark.operators.dedup import connected_components
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),  # chain, diameter 5
              (10, 11), (11, 12), (10, 12),             # triangle
@@ -431,25 +404,6 @@ def test_connected_components_exact(spark):
     # under-iterated propagation must NOT silently pass the chain
     under = {r["id"]: r["group_id"] for r in connected_components(pairs, iters=1).collect()}
     assert under != got
-
-    docs = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma delta epsilon zeta"),
-            (1, "alpha beta gamma delta epsilon eta"),    # near 0
-            (2, "alpha beta gamma delta theta eta"),      # near 1, farther from 0
-            (50, "completely different text about spark"),
-        ],
-        "doc_id long, text string",
-    )
-    groups = {
-        r["doc_id"]: r["group_id"]
-        for r in near_dup_groups(
-            docs, n_hashes=64, bands=32, shingle_k=2, jaccard_threshold=0.3,
-            max_bucket_size=10**9,
-        ).collect()
-    }
-    assert groups.get(0) == 0 and groups.get(1) == 0 and groups.get(2) == 0
-    assert 50 not in groups  # no dup partner -> not in any group
 
 
 def test_connected_components_early_stop_identical(spark):

@@ -1,5 +1,5 @@
-"""Multimodal plumbing: schemas, batch shapes, decode/resize/frame-sample
-fan-out. Codec step is a deterministic stub (no PIL in container); the
+"""Multimodal plumbing: schemas, batch shapes, decode/resize/features.
+Codec step is a deterministic stub (no PIL in container); the
 Spark-side behavior is what's under test."""
 
 import hashlib
@@ -7,7 +7,6 @@ import hashlib
 from crawleria_spark.multimodal import (
     decode_media,
     extract_features,
-    frame_sample,
     resize_images,
 )
 
@@ -52,15 +51,6 @@ def test_resize_plan(spark):
             assert not r["resized"] and r["target_width"] == meta["width"]
 
 
-def test_frame_sample(spark):
-    decoded = decode_media(_media_df(spark))
-    frames = frame_sample(decoded, every_s=2.0, max_frames=8).collect()
-    assert all(r["media_id"] == "m2" for r in frames)  # only the video
-    ts = sorted(r["frame_ts"] for r in frames)
-    assert ts[0] == 0.0 and len(ts) <= 8
-    assert all(abs(t % 2.0) < 1e-9 for t in ts)
-
-
 def test_extract_features(spark):
     out = extract_features(_media_df(spark), dim=8)
     rows = out.collect()
@@ -69,17 +59,6 @@ def test_extract_features(spark):
 
     for r in rows:
         assert abs(np.linalg.norm(r["features"]) - 1.0) < 1e-5
-
-
-def test_encode_for_llm(spark):
-    import base64
-
-    from crawleria_spark.multimodal import encode_for_llm
-
-    out = encode_for_llm(_media_df(spark), cap=2).collect()
-    assert len(out) == 2  # A9 cap
-    for r in out:
-        assert base64.b64decode(r["b64"]) == bytes(r["content"])
 
 
 def _make_png(w: int, h: int) -> bytes:

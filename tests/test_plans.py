@@ -102,6 +102,25 @@ def test_no_row_python_udfs_anywhere(spark, entry):
         assert "BatchEvalPython" not in plan, name
 
 
+def test_fetch_stage_has_one_python_node(spark):
+    """The crawl's fetch is its one Python crossing: the mapInPandas
+    fetch UDF. doc_id (and the span zip) are JVM columns around it.
+    Plan-only — no Spark job runs."""
+    import re
+
+    from crawleria_spark.sources.fetch import (
+        fetch_stage,
+        synthetic_fetcher,
+        with_spans_column,
+    )
+    from crawleria_spark.synthetic.world import WorldConfig
+
+    df = spark.createDataFrame([("https://h0.example.org/p/0",)], "url string")
+    plan = _plan(with_spans_column(fetch_stage(df, synthetic_fetcher(WorldConfig()))))
+    nodes = re.findall(r"\b(MapInPandas|MapInArrow|\w*EvalPython\w*)\b", plan)
+    assert nodes == ["MapInPandas"], plan
+
+
 def test_clustered_derivation_stays_jvm_side(spark, entry):
     """The r3 clustered-embedding derivation (ANN oracle substrate) is a
     pure JVM transform expression — no Python crossing before the probe

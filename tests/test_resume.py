@@ -190,6 +190,15 @@ def test_capture_single_page(spark, tmp_path):
     assert row["status"] == "ok"
     assert row["politeness_slot"] == 0 and row["seq_in_host"] == 0
     assert row["doc_id"] and row["doc_id"].startswith("h")
+    # a ;params variant is the same page: same url_canon, and the doc_id
+    # drops the params the way the reference's urlparse does
+    from crawleria_spark.functions.urls import canonicalize, clean_filename
+
+    variant = url + ";jsessionid=X"
+    row = eng.capture_single_page(variant)
+    assert row["status"] == "ok"
+    assert row["url_canon"] == canonicalize(url)
+    assert row["doc_id"] == clean_filename(variant) == clean_filename(url)
 
 
 def test_fresh_crawl_resets_reused_catalog(spark, tmp_path):

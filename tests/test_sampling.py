@@ -11,46 +11,40 @@ def test_sample_frac_one_selects_everything(spark):
     # frac=1.0 saturates the hex threshold: 16^6 formats to a 7-char
     # string whose lexicographic compare against 6-char hex selects only
     # ~6.25% of rows. The predicate must special-case saturation.
-    from crawleria_spark.operators.sampling import deterministic_sample, split_train_eval
+    from crawleria_spark.operators.sampling import deterministic_sample
 
     df = spark.range(400).withColumnRenamed("id", "k")
     assert deterministic_sample(df, 1.0, "k").count() == 400
     assert deterministic_sample(df, 0.0, "k").count() == 0
     # within float resolution of 1.0 — same saturation path
     assert deterministic_sample(df, 1.0 - 1e-9, "k").count() == 400
-    train, ev = split_train_eval(df, 1.0, "k")
-    assert train.count() == 0 and ev.count() == 400
 
 
 def test_split_keeps_null_keys(spark):
     # NULL key => NULL md5 => NULL predicate; without coalesce the row
     # vanishes from BOTH filter(pred) and filter(~pred).
-    from crawleria_spark.operators.sampling import split_train_eval
+    from crawleria_spark.operators.sampling import sample_predicate
 
     df = spark.createDataFrame(
         [(None,), ("a",), ("b",), ("c",)], "k string"
     )
-    train, ev = split_train_eval(df, 0.5, "k")
+    pred = sample_predicate("k", 0.5)
+    inside, outside = df.filter(pred), df.filter(~pred)
     got = sorted(
-        (r["k"] or "<null>") for part in (train, ev) for r in part.collect()
+        (r["k"] or "<null>") for part in (inside, outside) for r in part.collect()
     )
     assert got == ["<null>", "a", "b", "c"]
-    # and deterministically in train
-    assert any(r["k"] is None for r in train.collect())
+    # and deterministically outside the sample
+    assert any(r["k"] is None for r in outside.collect())
 
 
 def test_parquet_footer_stats(tmp_path, spark):
-    from crawleria_spark.sources.stats import (
-        key_bound,
-        parquet_column_max,
-        parquet_num_rows,
-    )
+    from crawleria_spark.sources.stats import key_bound, parquet_column_max
 
     path = str(tmp_path / "t.parquet")
     spark.range(100).withColumnRenamed("id", "doc_id").withColumn(
         "x", F.lit("y")
     ).write.parquet(path)
-    assert parquet_num_rows(path) == 100
     assert parquet_column_max(path, "doc_id") == 99
     assert key_bound(path, "doc_id") == 100.0
     # empty table: bound falls back to 1 (single bucket, still correct)

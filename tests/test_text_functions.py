@@ -13,7 +13,6 @@ from crawleria_spark.functions.text import (
     quality_score,
     stopword_ratio,
     token_count,
-    word_token_count,
 )
 
 SAMPLES = [
@@ -37,13 +36,6 @@ def test_token_count(spark):
     got = {r["id"]: r["n"] for r in rows}
     want = {i: len(s.split()) for i, s in enumerate(SAMPLES)}
     assert got == want
-
-
-def test_word_token_count(spark):
-    rows = _df(spark).select("id", word_token_count("text").alias("n")).collect()
-    pat = re.compile(r"[A-Za-z0-9]+(?:'[a-z]+)?")
-    want = {i: len(pat.findall(s)) for i, s in enumerate(SAMPLES)}
-    assert {r["id"]: r["n"] for r in rows} == want
 
 
 def test_ratios_and_quality(spark):

@@ -1,18 +1,17 @@
-"""Two-implementation parity: vectorized pandas URL functions vs the
-scalar urllib twins (and vs the reference get_clean_filename semantics,
-src/utils.py:38-60)."""
+"""Two-implementation parity: the JVM Column expressions Spark runs vs
+the scalar urllib twins the driver runs (and vs the reference
+get_clean_filename semantics, src/utils.py:38-60).
 
-import pandas as pd
+Every JVM check reads one collected Spark job over one corpus:
+adversarial URLs, synthetic-world links, ``;params`` URLs and ~2,000
+seeded random URLs."""
+
+import random
+from urllib.parse import urlparse
+
 import pytest
 
-from crawleria_spark.functions.urls import (
-    canonicalize,
-    canonicalize_series,
-    clean_filename,
-    clean_filename_series,
-    host_of,
-    host_series,
-)
+from crawleria_spark.functions.urls import canonicalize, clean_filename, host_of
 
 ADVERSARIAL = [
     "https://example.com",
@@ -36,11 +35,84 @@ ADVERSARIAL = [
     "https://hub.example.com/private/p/7",
 ]
 
+# urlparse splits ';params' off the last path segment for the schemes in
+# urllib.parse.uses_params only (git is not one of them)
+PARAMS = [
+    "http://h.example.org/p;jsessionid=ABC#f",
+    "https://h.example.org/p;jsessionid=ABC?q=1",
+    "https://h.example.org/p/;jsessionid=ABC",
+    "HTTP://H.EXAMPLE.ORG:80/P;JSESSIONID=abc;x=1",
+    "https://h.example.org/a;b/c",
+    "https://h.example.org/a;b/c;d",
+    "https://h.example.org/dir/;x",
+    "https://h.example.org/dir/;x/",
+    "https://h.example.org;x/p",
+    "https://h.example.org/;",
+    "ftp://files.example.com/pub/f.txt;type=i",
+    "git://git.example.org/repo.git;branch=main",
+    "git://git.example.org/a;b/c;d",
+]
 
-def test_clean_filename_parity():
-    got = clean_filename_series(pd.Series(ADVERSARIAL)).tolist()
-    want = [clean_filename(u) for u in ADVERSARIAL]
-    assert got == want
+_SCHEMES = ["http", "https", "ftp", "git"]
+_HOST_FIRST = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+_HOST_REST = _HOST_FIRST + ".-"
+_PORTS = ["", ":80", ":443", ":8080"]
+_SEG_CHARS = "abcdefghijklmnopqrstuvwxyzABC0123456789._~ü路-;="
+_QUERIES = ["", "?a=1", "?a=1&b=x", "?_=%20"]
+_FRAGS = ["", "#f", "#frag/with/slash"]
+
+
+def _random_urls(n: int, seed: int = 20240611) -> list[str]:
+    rng = random.Random(seed)
+    out = []
+    for _ in range(n):
+        host = rng.choice(_HOST_FIRST) + "".join(
+            rng.choice(_HOST_REST) for _ in range(rng.randint(0, 30))
+        )
+        segs = [
+            "".join(rng.choice(_SEG_CHARS) for _ in range(rng.randint(0, 12)))
+            for _ in range(rng.randint(0, 12))
+        ]
+        out.append(
+            f"{rng.choice(_SCHEMES)}://{host}{rng.choice(_PORTS)}/{'/'.join(segs)}"
+            f"{rng.choice(_QUERIES)}{rng.choice(_FRAGS)}"
+        )
+    return out
+
+
+@pytest.fixture(scope="module")
+def jvm_rows(spark):
+    """(url → row of every JVM expression) over the whole corpus, in ONE
+    Spark job."""
+    from crawleria_spark.functions.urls import (
+        doc_id_expr,
+        host_expr,
+        path_expr,
+        url_canon_expr,
+        url_hash_col,
+    )
+    from crawleria_spark.synthetic.world import WorldConfig, page_for_url
+
+    w = WorldConfig(seed=11, n_hosts=6, pages_per_host=40, dup_variant_prob=0.3,
+                    long_path_prob=0.2, error_rate=0.0)
+    urls = ADVERSARIAL + PARAMS + _random_urls(2000)
+    for i in range(60):
+        urls.extend(page_for_url(f"https://h{i % 6}.example.org/p/{i}", w)["links"])
+    df = spark.createDataFrame([(u,) for u in sorted(set(urls))], "url string")
+    rows = df.select(
+        "url",
+        url_canon_expr("url").alias("canon"),
+        doc_id_expr("url").alias("doc_id"),
+        host_expr("url").alias("host"),
+        path_expr("url").alias("path"),
+        url_hash_col(url_canon_expr("url")).alias("url_hash"),
+    ).collect()
+    return {r["url"]: r for r in rows}
+
+
+def test_clean_filename_parity(jvm_rows):
+    for u, r in jvm_rows.items():
+        assert r["doc_id"] == clean_filename(u), u
 
 
 def test_clean_filename_reference_semantics():
@@ -53,12 +125,14 @@ def test_clean_filename_reference_semantics():
     long_url = "https://example.com/" + "x/" * 60
     out = clean_filename(long_url)
     assert out.startswith("example.com_") and len(out) == len("example.com_") + 10
+    # urlparse drops the last segment's ;params (http) but not git's
+    assert clean_filename("http://h.example.org/p;jsessionid=ABC") == "h.example.org_p"
+    assert clean_filename("git://g.example.org/r;b") == "g.example.org_r;b"
 
 
-def test_canonicalize_parity():
-    got = canonicalize_series(pd.Series(ADVERSARIAL)).tolist()
-    want = [canonicalize(u) for u in ADVERSARIAL]
-    assert got == want
+def test_canonicalize_parity(jvm_rows):
+    for u, r in jvm_rows.items():
+        assert r["canon"] == canonicalize(u), u
 
 
 def test_canonicalize_semantics():
@@ -70,101 +144,43 @@ def test_canonicalize_semantics():
     assert canonicalize("https://example.com:8443/x") == "https://example.com:8443/x"
     assert canonicalize("https://example.com/p#frag") == "https://example.com/p"
     assert canonicalize("https://example.com/p?q=1#f") == "https://example.com/p?q=1"
+    assert canonicalize("http://h.example.org/p;jsessionid=ABC#f") == "http://h.example.org/p"
     # duplicate variants collapse
     variants = [
         "https://h1.example.org/p/3",
         "https://h1.example.org/p/3/",
         "https://h1.example.org/p/3#frag2",
         "https://H1.EXAMPLE.ORG/p/3",
+        "https://h1.example.org/p/3;jsessionid=X",
     ]
     assert len({canonicalize(v) for v in variants}) == 1
 
 
-def test_host_parity():
-    got = host_series(pd.Series(ADVERSARIAL)).tolist()
-    want = [host_of(u) for u in ADVERSARIAL]
-    assert got == want
+def test_host_parity(jvm_rows):
+    for u, r in jvm_rows.items():
+        assert r["host"] == host_of(u), u
 
 
-@pytest.mark.usefixtures("spark")
-def test_spark_udfs(spark):
-    from pyspark.sql import functions as F
-
-    from crawleria_spark.functions.urls import doc_id_udf, url_canon_udf, url_hash_col
-
-    df = spark.createDataFrame([(u,) for u in ADVERSARIAL], "url string")
-    out = df.select(
-        "url",
-        doc_id_udf("url").alias("doc_id"),
-        url_canon_udf("url").alias("url_canon"),
-    ).withColumn("url_hash", url_hash_col("url_canon"))
-    rows = {r["url"]: r for r in out.collect()}
+def test_spark_udfs(jvm_rows):
+    """The Spark columns the crawl writes per URL (doc_id, url_canon,
+    url_hash) on the adversarial URLs: doc_id and url_canon equal the
+    scalar twins, and url_hash is a 64-bit hash of url_canon alone."""
     for u in ADVERSARIAL:
-        assert rows[u]["doc_id"] == clean_filename(u)
-        assert rows[u]["url_canon"] == canonicalize(u)
-        assert isinstance(rows[u]["url_hash"], int)
+        r = jvm_rows[u]
+        assert r["doc_id"] == clean_filename(u), u
+        assert r["canon"] == canonicalize(u), u
+        assert isinstance(r["url_hash"], int), u
+    hash_of = {}
+    for u, r in jvm_rows.items():
+        assert hash_of.setdefault(r["canon"], r["url_hash"]) == r["url_hash"], u
 
 
-# ---------------------------------------------------------------------------
-# property-based parity (hypothesis): vectorized == urllib twin on random URLs
-# ---------------------------------------------------------------------------
-
-from hypothesis import given, settings, strategies as st
-
-_scheme = st.sampled_from(["http", "https", "ftp"])
-_host = st.from_regex(r"[a-zA-Z0-9][a-zA-Z0-9.\-]{0,30}", fullmatch=True)
-_port = st.sampled_from(["", ":80", ":443", ":8080"])
-_pathseg = st.text(
-    alphabet="abcdefghijklmnopqrstuvwxyzABC0123456789._~ü路-", min_size=0, max_size=12
-)
-_path = st.lists(_pathseg, min_size=0, max_size=12).map(lambda segs: "/".join(segs))
-_query = st.sampled_from(["", "?a=1", "?a=1&b=x", "?_=%20"])
-_frag = st.sampled_from(["", "#f", "#frag/with/slash"])
-
-
-@st.composite
-def urls(draw):
-    return (
-        f"{draw(_scheme)}://{draw(_host)}{draw(_port)}/{draw(_path)}"
-        f"{draw(_query)}{draw(_frag)}"
-    )
-
-
-@given(st.lists(urls(), min_size=1, max_size=40))
-@settings(max_examples=150, deadline=None)
-def test_property_vectorized_matches_urllib(url_list):
-    s = pd.Series(url_list)
-    assert clean_filename_series(s).tolist() == [clean_filename(u) for u in url_list]
-    assert canonicalize_series(s).tolist() == [canonicalize(u) for u in url_list]
-    assert host_series(s).tolist() == [host_of(u) for u in url_list]
-
-
-def test_jvm_exprs_parity(spark):
-    """JVM Column twins (url_canon_expr / doc_id_expr / host_expr) are
-    byte-identical to the scalar urllib implementations — the crawl's
-    discovery path and the headline doc_id query run these inside
-    whole-stage codegen, so divergence would silently fork the seen set."""
-    from pyspark.sql import functions as F
-
-    from crawleria_spark.functions.urls import doc_id_expr, host_expr, url_canon_expr
-
-    # ADVERSARIAL plus world-shaped URLs (variants, long paths)
-    from crawleria_spark.synthetic.world import WorldConfig, page_for_url
-
-    w = WorldConfig(seed=11, n_hosts=6, pages_per_host=40, dup_variant_prob=0.3,
-                    long_path_prob=0.2, error_rate=0.0)
-    urls = list(ADVERSARIAL)
-    for i in range(60):
-        urls.extend(page_for_url(f"https://h{i % 6}.example.org/p/{i}", w)["links"])
-    urls = sorted(set(urls))
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    rows = df.select(
-        "url",
-        url_canon_expr("url").alias("canon"),
-        doc_id_expr("url").alias("doc_id"),
-        host_expr("url").alias("host"),
-    ).collect()
-    for r in rows:
-        assert r["canon"] == canonicalize(r["url"]), r["url"]
-        assert r["doc_id"] == clean_filename(r["url"]), r["url"]
-        assert r["host"] == host_of(r["url"]), r["url"]
+def test_jvm_exprs_parity(jvm_rows):
+    """The rest of the JVM twins: ``path_expr`` (robots-gate path, and
+    the base of url_canon_expr/doc_id_expr) equals ``urlparse(url).path``.
+    The crawl's discovery path and the headline doc_id query run these
+    inside whole-stage codegen, so divergence would silently fork the
+    seen set."""
+    assert set(PARAMS) <= set(jvm_rows)
+    for u, r in jvm_rows.items():
+        assert r["path"] == urlparse(u).path, u
