@@ -11,8 +11,9 @@ Parity targets in the reference:
 The reference has no URL-seen set (a ``Set`` is imported at
 src/crawler/crawler.py:8 but never used); the engine defines a proper
 canonical URL for dedup (``canonicalize``): lowercase scheme+host, strip
-default port, drop fragment and ``;params``, collapse empty path to '/',
-strip trailing slash on non-root paths, keep the query string.
+default port, drop fragment and ``;params``, strip trailing slashes (and,
+for the ``uses_params`` schemes, trailing ``;params`` segments, so that the
+form is a fixed point), collapse empty path to '/', keep the query string.
 
 This module is the package's only URL parser, with one implementation per
 side, changed together (tests/test_urls.py pins them to each other):
@@ -35,6 +36,7 @@ by ``urljoin``, which has already removed them.
 from __future__ import annotations
 
 import hashlib
+import re
 from urllib.parse import urlparse, uses_params
 
 from pyspark.sql import Column
@@ -46,6 +48,14 @@ _URL_RE = (
 )
 
 _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
+
+# The canonical path's trailing run of '/' and ';params' segments. For the
+# schemes in ``uses_params`` stripping only '/' is not a fixed point: it
+# can expose a last segment ';x' that the next urlparse splits off as
+# params ('/a/;x/' → '/a/;x' → '/a'). ';[^/;]*' rather than ';[^/]*'
+# keeps each match unambiguous, so a run of ';' cannot backtrack
+# exponentially.
+_TRAILING_PARAMS_RE = r"(?:/|;[^/;]*)+$"
 
 
 # ---------------------------------------------------------------------------
@@ -78,9 +88,8 @@ def canonicalize(url: str) -> str:
     default = _DEFAULT_PORTS.get(scheme)
     if default and netloc.endswith(default):
         netloc = netloc[: -len(default)]
-    path = p.path or "/"
-    if len(path) > 1 and path.endswith("/"):
-        path = path.rstrip("/") or "/"
+    trailing = _TRAILING_PARAMS_RE if scheme in uses_params else "/+$"
+    path = re.sub(trailing, "", p.path) or "/"
     out = f"{scheme}://{netloc}{path}"
     if p.query:
         out += f"?{p.query}"
@@ -134,8 +143,9 @@ def doc_id_expr(url: Column | str) -> Column:
 
 def url_canon_expr(url: Column | str) -> Column:
     """JVM twin of ``canonicalize`` (the seen-set key): lowercase
-    scheme+host, strip default port, path '' → '/', strip trailing
-    slashes on non-root paths, keep query, drop fragment and params.
+    scheme+host, strip default port, strip trailing slashes (and, for
+    ``uses_params`` schemes, trailing ';params' segments), path '' → '/',
+    keep query, drop fragment and params.
     Runs on every discovered link each round."""
     col = _col(url)
     scheme = F.lower(_group(col, 1))
@@ -152,10 +162,10 @@ def url_canon_expr(url: Column | str) -> Column:
         .otherwise(netloc)
     )
     path = path_expr(col)
+    path = F.when(
+        scheme.isin(*uses_params), F.regexp_replace(path, _TRAILING_PARAMS_RE, "")
+    ).otherwise(F.regexp_replace(path, "/+$", ""))
     path = F.when(path == "", "/").otherwise(path)
-    stripped = F.regexp_replace(path, "/+$", "")
-    stripped = F.when(stripped == "", "/").otherwise(stripped)
-    path = F.when((F.length(path) > 1) & path.endswith("/"), stripped).otherwise(path)
     out = F.concat(scheme, F.lit("://"), netloc, path)
     query = _group(col, 4)
     return F.when(query != "", F.concat(out, F.lit("?"), query)).otherwise(out)

@@ -8,10 +8,11 @@ query lifecycle (SURVEY.md §3.3):
       → top-k + rank (A6/A8, limit=5 :117, rank=i+1 :225)
       → rerank when enabled and >1 result (A7 :154-159)
       → media enrichment join + existence filter (J1/J2/P7 :167-202)
-    format_for_llm(results):
-      head-4 media cap (A9; generator.py:101-102)
+    format_for_llm(results):            (driver side: results are top-k)
+      one collect of the results + one ``doc_id IN (...)`` spans read
+      → head-4 media cap (A9; generator.py:101-102)
       → group spans by kind, count + top-5 text sample (A1/A2;
-        generator.py:149-165)
+        generator.py:149-165), in Python over the collected spans
 
 Scoring is pluggable: 'vector' = cosine against an embedding column
 (JVM fold), 'text' = token-overlap Jaccard against the query string
@@ -21,13 +22,15 @@ search_type ∈ {visual, text, hybrid} (src/retrieval/retriever.py:126-151).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawleria_spark.config import CrawlConfig
 from crawleria_spark.operators.cache import QueryCache
 from crawleria_spark.operators.dedup import cosine_expr
-from crawleria_spark.operators.topk import enrich_with_media, head_cap, threshold_topk
+from crawleria_spark.operators.topk import enrich_with_media, threshold_topk
 
 
 def text_overlap_score(text_col, query: str):
@@ -124,54 +127,56 @@ class Retriever:
         summarize spans per kind with counts + first-5 text sample, and
         attach per-result ``visual_elements`` (span-order {type, text})
         so ``assemble_model_input`` / ``visual_elements_prompt`` can
-        build the reference's model input without another Spark pass."""
-        capped = head_cap(results, 4).collect()
-        per_doc = (
-            spans.join(results.select(self.id_col), self.id_col)
-            .select(self.id_col, F.explode("spans").alias("s"))
-            .select(
-                self.id_col,
-                F.col("s.kind").alias("kind"),
-                F.col("s.text").alias("text"),
-                F.col("s.offset").alias("offset"),
-            )
-        ).persist()
-        summary = (
-            per_doc.groupBy("kind")
-            .agg(
-                F.count("*").alias("n"),
-                F.slice(
-                    F.array_sort(F.collect_list("text")), 1, 5
-                ).alias("sample_texts"),
-            )
-            .collect()
-        )
-        elements = (
-            per_doc.groupBy(self.id_col)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("offset", "kind", "text"))
-                ).alias("els")
-            )
-            .collect()
-        )
-        per_doc.unpersist()
+        build the reference's model input without another Spark pass.
+
+        ``results`` is top-k sized: it is collected once, its ids fetch
+        their ``spans`` rows in one pushed-down ``IN`` filter, and the
+        rest is plain Python. The spans are matched as an inner join
+        would match them: a doc_id repeated in ``results`` or in
+        ``spans`` contributes its spans once per pairing. The summary
+        covers all of ``results``; the returned rows are its first 4."""
+        key = self.id_col
+        rows = results.collect()
+        hits = Counter(r[key] for r in rows if r[key] is not None)
+        spans_of: dict = {}
+        if hits:
+            for s in (
+                spans.filter(F.col(key).isin(sorted(hits)))
+                .select(key, "spans")
+                .collect()
+            ):
+                spans_of.setdefault(s[key], []).extend(
+                    (None, None, None) if e is None
+                    else (e["offset"], e["kind"], e["text"])
+                    for e in s["spans"] or ()
+                )
+        # (offset, kind, text) order with nulls first, as array_sort
+        # orders the struct(offset, kind, text) Spark would build
+        per_doc = {
+            k: sorted(v * hits[k], key=lambda e: [(x is not None, x) for x in e])
+            for k, v in spans_of.items()
+        }
+        counts: Counter = Counter()
+        texts: dict = {}
+        for els in per_doc.values():
+            for _, kind, text in els:
+                counts[kind] += 1
+                if text is not None:
+                    texts.setdefault(kind, []).append(text)
         by_id = {
-            r[self.id_col]: [
-                {"type": e["kind"], "text": e["text"]} for e in r["els"]
-            ]
-            for r in elements
+            k: [{"type": kind, "text": text} for _, kind, text in els]
+            for k, els in per_doc.items()
         }
         out_results = []
-        for r in capped:
+        for r in rows[:4]:
             d = r.asDict()
-            d["visual_elements"] = by_id.get(d[self.id_col], [])
+            d["visual_elements"] = by_id.get(d[key], [])
             out_results.append(d)
         return {
             "results": out_results,
             "element_summary": {
-                r["kind"]: {"count": r["n"], "sample": r["sample_texts"]}
-                for r in summary
+                kind: {"count": n, "sample": sorted(texts.get(kind, []))[:5]}
+                for kind, n in counts.items()
             },
         }
 

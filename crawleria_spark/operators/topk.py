@@ -1,4 +1,4 @@
-"""Retrieval-side operators: threshold + top-k + rank + rerank + head-cap.
+"""Retrieval-side operators: threshold + top-k + rank + rerank + media join.
 
 Reference semantics being re-expressed (SURVEY.md §2.5):
 - A6 top-k retrieval: `limit = top_k (5)` best-scoring docs above the
@@ -10,8 +10,6 @@ Reference semantics being re-expressed (SURVEY.md §2.5):
   (src/retrieval/retriever.py:225)
 - A7 rerank: re-score + re-sort when reranking_enabled and >1 result
   (src/retrieval/retriever.py:154-159)
-- A9 head-4 cap: at most 4 media results forwarded
-  (src/response_generator/generator.py:101-102)
 - J1/J2 doc→media enrichment join (src/retrieval/retriever.py:167-202):
   broadcast hash join — the media side is small by construction.
 
@@ -77,11 +75,6 @@ def rerank(
     order = [F.col(score_col).desc()] + [F.col(c) for c in (tiebreak_cols or [])]
     out = df.withColumn(score_col, new_score).orderBy(*order)
     return out.limit(k) if k is not None else out
-
-
-def head_cap(df: DataFrame, n: int = 4) -> DataFrame:
-    """At most n rows in current order (reference A9 image cap)."""
-    return df.limit(n)
 
 
 def enrich_with_media(

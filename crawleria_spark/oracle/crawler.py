@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
-from urllib.parse import urlparse
+from urllib.parse import urlparse, uses_params
 
 from crawleria_spark.config import CrawlConfig
 from crawleria_spark.synthetic.world import WorldConfig, page_for_url, robots_rules
@@ -73,7 +73,18 @@ def _canon(url: str) -> str:
     if dp and netloc.endswith(dp):
         netloc = netloc[: -len(dp)]
     path = p.path or "/"
-    if len(path) > 1 and path.endswith("/"):
+    if scheme in uses_params:
+        # trailing '/' and ';params' segments, so that the form is a
+        # fixed point: '/a/;x/' → '/a', not '/a/;x'
+        while True:
+            cut = path.rstrip("/")
+            semi = cut.find(";", cut.rfind("/") + 1)
+            cut = cut if semi < 0 else cut[:semi]
+            if cut == path:
+                break
+            path = cut
+        path = path or "/"
+    elif len(path) > 1 and path.endswith("/"):
         path = path.rstrip("/") or "/"
     out = f"{scheme}://{netloc}{path}"
     if p.query:

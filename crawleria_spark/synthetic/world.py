@@ -42,7 +42,11 @@ class WorldConfig:
     pages_per_host: int = 200
     mean_links: int = 8
     error_rate: float = 0.03
-    hub_host_prob: float = 0.35  # probability a cross-host link targets host 0
+    # Share of ALL links sent to host 0 through the skew branch of
+    # _link_target: a cross-host link (40% of links) picks the hub with
+    # probability hub_host_prob / 0.4, so 0.35 sends 87.5% of cross-host
+    # links to the hub and any value >= 0.4 sends all of them.
+    hub_host_prob: float = 0.35
     dup_variant_prob: float = 0.08  # canonical-duplicate link variants
     private_link_prob: float = 0.06  # links into robots-disallowed subtree
     long_path_prob: float = 0.01  # >100-char path (md5 doc_id branch)

@@ -208,3 +208,117 @@ def test_format_for_llm_visual_elements(spark, corpus):
         {"type": "link", "text": "t2"},
     ]
     assert "In result" in visual_elements_prompt("q", ctx)
+
+
+_SPANS_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind string, text string, media_ref string, offset int>>"
+)
+
+
+def _spark_format_reference(results, spans, id_col="doc_id"):
+    """The Spark formulation format_for_llm replaced, kept as its
+    reference: head-4 collect, spans ⋈ results → explode →
+    groupBy(kind) count + sorted first-5 texts, groupBy(id) sorted
+    struct(offset, kind, text)."""
+    capped = results.limit(4).collect()
+    per_doc = (
+        spans.join(results.select(id_col), id_col)
+        .select(id_col, F.explode("spans").alias("s"))
+        .select(
+            id_col,
+            F.col("s.kind").alias("kind"),
+            F.col("s.text").alias("text"),
+            F.col("s.offset").alias("offset"),
+        )
+    )
+    summary = (
+        per_doc.groupBy("kind")
+        .agg(
+            F.count("*").alias("n"),
+            F.slice(F.array_sort(F.collect_list("text")), 1, 5).alias("sample"),
+        )
+        .collect()
+    )
+    elements = (
+        per_doc.groupBy(id_col)
+        .agg(F.array_sort(F.collect_list(F.struct("offset", "kind", "text"))).alias("els"))
+        .collect()
+    )
+    by_id = {
+        r[id_col]: [{"type": e["kind"], "text": e["text"]} for e in r["els"]]
+        for r in elements
+    }
+    return {
+        "results": [
+            {**r.asDict(), "visual_elements": by_id.get(r[id_col], [])} for r in capped
+        ],
+        "element_summary": {
+            r["kind"]: {"count": r["n"], "sample": list(r["sample"])} for r in summary
+        },
+    }
+
+
+def test_format_for_llm_matches_spark_aggregation(spark, corpus):
+    """Driver-side format_for_llm == the Spark join/explode/groupBy it
+    replaced, on adversarial spans: null text/kind/element, tied offsets,
+    a result doc without spans, a spans doc outside the results, a
+    duplicated spans row and a doc_id repeated in the results (media
+    with two refs)."""
+
+    def el(kind, text, offset):
+        return {"kind": kind, "text": text, "media_ref": None, "offset": offset}
+
+    d1 = [el("link", "b", 1), el("link", None, 1), el("heading", "a", 1),
+          el(None, "z", 0), None, el("link", "ß", None)]
+    spans = spark.createDataFrame(
+        [
+            ("d1", d1),
+            ("d1", d1),  # duplicated spans row
+            ("d2", [el("para", t, i) for i, t in enumerate("gfedcba")]),
+            ("d3", None),
+            ("d4", []),
+            ("d9", [el("link", "not a result", 0)]),  # not in the results
+        ],
+        _SPANS_SCHEMA,
+    )
+    media = spark.createDataFrame(
+        [("d1", "img://1a"), ("d1", "img://1b"), ("d2", "img://2"),
+         ("d3", "img://3"), ("d4", "img://4"), ("d5", "img://5")],
+        "doc_id string, media_ref string",
+    )
+    cfg = CrawlConfig(top_k=5, similarity_threshold=0.0)
+    r = Retriever(corpus, media=media, config=cfg)
+    results = r.retrieve(query_text="spark crawl frontier fetch queue").persist()
+    ids = [row["doc_id"] for row in results.collect()]
+    assert ids.count("d1") == 2 and "d5" in ids  # d5: a result without spans
+    assert r.format_for_llm(results, spans) == _spark_format_reference(results, spans)
+    results.unpersist()
+    none = results.filter(F.lit(False))
+    assert r.format_for_llm(none, spans) == {"results": [], "element_summary": {}}
+
+
+def test_query_path_spark_jobs(spark, corpus, tmp_path):
+    """retrieve + format_for_llm behind the cache: a hit runs at most 2
+    Spark jobs (results collect + spans lookup), a miss at most 3 (the
+    scoring collect of the store on top)."""
+    spans = spark.createDataFrame(
+        [("d1", [{"kind": "heading", "text": "t1", "media_ref": None, "offset": 0}])],
+        _SPANS_SCHEMA,
+    )
+    r = Retriever(
+        corpus,
+        config=CrawlConfig(top_k=3, similarity_threshold=0.2),
+        cache=QueryCache(spark, str(tmp_path / "qc")),
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(now):
+        # job ids are numbered in submission order
+        mark = max(tracker.getJobIdsForGroup(None), default=-1)
+        ctx = r.format_for_llm(r.retrieve(query_text="spark crawl", now=now), spans)
+        assert ctx["results"]
+        return len([j for j in tracker.getJobIdsForGroup(None) if j > mark])
+
+    assert jobs(0.0) <= 3  # miss
+    assert jobs(1.0) <= 2  # hit

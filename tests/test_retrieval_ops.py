@@ -1,12 +1,14 @@
 """Retrieval-surface operators (A6-A9, P6, J1/J2, C1) on synthetic data."""
 
+import os
+import threading
+
 from pyspark.sql import functions as F
 
 from crawleria_spark.operators.cache import QueryCache
 from crawleria_spark.operators.topk import (
     enrich_with_media,
     grouped_topk,
-    head_cap,
     rerank,
     threshold_topk,
 )
@@ -43,7 +45,6 @@ def test_rerank_and_cap(spark):
     rows = rr.collect()
     rs = [r["rerank_score"] for r in rows]
     assert rs == sorted(rs, reverse=True)
-    assert head_cap(rr, 4).count() == 4  # reference image cap A9
 
 
 def test_enrich_with_media_broadcast(spark):
@@ -78,3 +79,49 @@ def test_query_cache_ttl(spark, tmp_path):
     assert len(calls) == 2  # computed on miss + on expiry only
     _, hit4 = cache.get_or_compute("other", compute, now=2000.0)
     assert not hit4
+
+
+def test_query_cache_entry_files(spark, tmp_path):
+    """One file per key: re-storing an expired key replaces its file, and
+    a stale lookup removes it."""
+    root = tmp_path / "qc"
+    cache = QueryCache(spark, str(root), ttl_s=10)
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    cache.store("q", df, now=0.0)
+    cache.store("q", df, now=100.0)  # the entry from t=0 had expired
+    assert os.listdir(root) == [f"{QueryCache.key_for('q')}.arrow"]
+    assert cache.lookup("q", now=105.0).collect() == df.collect()
+    assert cache.lookup("q", now=111.0) is None  # stale
+    assert os.listdir(root) == []
+
+
+def test_query_cache_two_clients(spark, tmp_path):
+    """Two caches on one root, storing different keys from two threads at
+    once, each see every key afterwards (no shared index to lose)."""
+    root = str(tmp_path / "qc")
+    caches = [QueryCache(spark, root), QueryCache(spark, root)]
+    keys = [[f"c{c}-q{i}" for i in range(3)] for c in range(2)]
+    frames = {
+        k: spark.createDataFrame([(k,)], "q string") for ks in keys for k in ks
+    }
+    start = threading.Barrier(2)
+
+    def client(cache, ks):
+        start.wait(timeout=60)
+        for k in ks:
+            cache.store(k, frames[k], now=0.0)
+
+    threads = [
+        threading.Thread(target=client, args=(cache, ks))
+        for cache, ks in zip(caches, keys)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    for cache in caches:
+        for k in frames:
+            hit = cache.lookup(k, now=1.0)
+            assert hit is not None, k
+            assert hit.collect()[0]["q"] == k

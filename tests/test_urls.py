@@ -12,6 +12,7 @@ from urllib.parse import urlparse
 import pytest
 
 from crawleria_spark.functions.urls import canonicalize, clean_filename, host_of
+from crawleria_spark.oracle.crawler import _canon
 
 ADVERSARIAL = [
     "https://example.com",
@@ -51,6 +52,11 @@ PARAMS = [
     "ftp://files.example.com/pub/f.txt;type=i",
     "git://git.example.org/repo.git;branch=main",
     "git://git.example.org/a;b/c;d",
+    "http://h.example.org/a/;x/",
+    "http://h.example.org/a;x/;y/",
+    # a run of ';' must not make the trailing-params strip backtrack
+    # exponentially
+    "https://h.example.org/" + ";" * 30 + "/a",
 ]
 
 _SCHEMES = ["http", "https", "ftp", "git"]
@@ -102,6 +108,7 @@ def jvm_rows(spark):
     rows = df.select(
         "url",
         url_canon_expr("url").alias("canon"),
+        url_canon_expr(url_canon_expr("url")).alias("canon_twice"),
         doc_id_expr("url").alias("doc_id"),
         host_expr("url").alias("host"),
         path_expr("url").alias("path"),
@@ -154,6 +161,19 @@ def test_canonicalize_semantics():
         "https://h1.example.org/p/3;jsessionid=X",
     ]
     assert len({canonicalize(v) for v in variants}) == 1
+
+
+def test_canonical_form_is_fixed_point(jvm_rows):
+    """Canonicalizing a canonical URL changes nothing, in all three
+    implementations: ``forget`` canonicalizes a url_canon read back from
+    ``seen`` and must find its row."""
+    for u, r in jvm_rows.items():
+        c = canonicalize(u)
+        assert canonicalize(c) == c, u
+        assert _canon(u) == c, u  # the oracle's copy agrees on the corpus
+        assert _canon(c) == c, u
+        assert r["canon_twice"] == r["canon"], u
+    assert canonicalize("http://h.example.org/a/;x/") == "http://h.example.org/a"
 
 
 def test_host_parity(jvm_rows):
